@@ -43,6 +43,7 @@ from ..operators.marts import (
     overall_stats,
     pipeline_run_report,
     pipeline_summary,
+    write_mart,
 )
 from ..checks import check_violations, check_violations_sql
 from ..operators.staging import stg_raw_temperature_readings
@@ -350,8 +351,10 @@ def _mart_df_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (`dbt_project.yml:28-30` — marts are `materialized: table`) and every
 # summary model SELECTs from that table. The Spark analog: the first
 # mart-derived query in a process writes the full-precision mart to a
-# process-local parquet path; the other six (5 summaries + ops count)
-# scan it instead of recomputing the staging → dedup → anomaly chain.
+# process-local parquet path in the pipeline's own ``write_mart`` layout,
+# so registry summaries read what the pipeline publishes; the other six
+# (5 summaries + ops count) scan it instead of recomputing the staging →
+# dedup → anomaly chain.
 # At 100 TB this is exactly the right shape — you build the mart once per
 # load, not once per downstream query. Parquet round-trips every mart
 # column type (double/timestamp/date/bool/string) bit-exactly, and the
@@ -390,18 +393,7 @@ def _mart_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             scratch,
             f"spark_mart_{os.getpid()}_{hashlib.md5(str(key).encode()).hexdigest()[:10]}.parquet",
         )
-        # Size the mart's output files for its readers: the fixture-scale
-        # mart is ~10^5 rows, and a 32-file layout makes every downstream
-        # summary pay 32 scan-task launches for ~3k rows each — measured
-        # 0.85 s → 0.55 s per summary at 8 files. The repartition (not
-        # coalesce) keeps the expensive staging→anomaly build fully
-        # parallel and only exchanges the final (small) mart rows. At
-        # production scale the writer sizes by bytes instead
-        # (maintenance.compact_small_files' target_bytes rule) and this
-        # constant is irrelevant — file count tracks data volume.
-        _mart_df_compute(spark, sf_dir).repartition(8).write.mode(
-            "overwrite"
-        ).parquet(path)
+        write_mart(_mart_df_compute(spark, sf_dir), path)
         _MART_CACHE[key] = path
     df = spark.read.parquet(path)
     df_cache[key] = df

@@ -827,8 +827,9 @@ RETENTION_SPEC = [("record_id", ""), ("device_id", ""), ("reading_timestamp", ""
 def retention_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S11 retention delete as rewrite-on-read: keep rows younger than 90
     days before the frozen run date (`iot_temperature_dag.py:267-270`).
-    At scale this is a partition-pruned scan when the mart is written
-    partitioned by reading_date (marts.write_mart)."""
+    At scale, run over the published mart, this is a scan that skips
+    whole files by their footer min/max on reading_date, which
+    marts.write_mart range-clusters on."""
     stg = stg_raw_temperature_readings(
         raw_readings(spark, sf_dir), with_processing_timestamp=False
     )

@@ -99,6 +99,21 @@ def _commit(table: str, version: int, entries: list[dict], layout_col: str) -> N
         os.remove(tmp)
 
 
+def write_clustered(
+    df: DataFrame, path: str, col: str, n_files: int, mode: str = "errorifexists"
+) -> None:
+    """Write ``df`` as at most ``n_files`` parquet files, range-partitioned
+    on ``col`` and sorted on it within each file. Every file then covers
+    a narrow ``col`` range, so its footer min/max stats let a scan skip
+    it on a ``col`` predicate — pruning without a directory per value."""
+    (
+        df.repartitionByRange(n_files, F.col(col))
+        .sortWithinPartitions(col)
+        .write.mode(mode)
+        .parquet(path)
+    )
+
+
 def _write_files(
     df: DataFrame, table: str, layout_col: str, n_files: int
 ) -> list[dict]:
@@ -109,11 +124,7 @@ def _write_files(
 
     write_id = uuid.uuid4().hex[:12]
     out_dir = os.path.join(table, "data", f"w{write_id}")
-    (
-        df.repartitionByRange(n_files, F.col(layout_col))
-        .sortWithinPartitions(layout_col)
-        .write.parquet(out_dir)
-    )
+    write_clustered(df, out_dir, layout_col, n_files)
     entries = []
     for p in sorted(glob.glob(os.path.join(out_dir, "*.parquet"))):
         md = pq.ParquetFile(p).metadata

@@ -32,3 +32,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def written_mart(spark, sf_dir, tmp_path_factory):
+    """The registry's in-memory mart and the path ``write_mart`` wrote it
+    to — the published layout the summaries read."""
+    from iot_temp_data_pipeline_spark.operators.marts import write_mart
+    from iot_temp_data_pipeline_spark.plans.registry import _mart_df_compute
+
+    mart = _mart_df_compute(spark, sf_dir)
+    path = str(tmp_path_factory.mktemp("mart") / "mart")
+    write_mart(mart, path)
+    return mart, path

@@ -8,12 +8,16 @@ fails CI even though results stay correct."""
 from __future__ import annotations
 
 import contextlib
+import datetime
+import glob
 import io
 
 from pyspark.sql import functions as F
 
 from iot_temp_data_pipeline_spark.plans.registry import REGISTRY
 from iot_temp_data_pipeline_spark.sources.catalog import load_table
+
+from .test_layout import _overlapping_files
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -493,3 +497,20 @@ def test_winnowing_fingerprints_zero_exchange(spark, sf_dir):
     plan = plan_of(REGISTRY["doc_fingerprints_winnowing"].spark(spark, sf_dir))
     assert "Exchange" not in plan
     assert "Window" not in plan
+
+
+def test_mart_day_filter_prunes_files(spark, written_mart):
+    """write_mart's range-clustered layout replaces partition pruning: a
+    one-day filter reaches the scan as a pushed reading_date predicate,
+    and the footer min/max ranges leave at most 2 files for it to read."""
+    _, path = written_mart
+    files = glob.glob(f"{path}/*.parquet")
+    assert 2 <= len(files) <= spark.sparkContext.defaultParallelism
+    assert not glob.glob(f"{path}/reading_date=*")  # no per-day directories
+    day = datetime.date(2024, 1, 15)
+    df = spark.read.parquet(path).filter(F.col("reading_date") == F.lit(day))
+    plan = plan_of(df)
+    pushed = next(ln for ln in plan.splitlines() if "PushedFilters" in ln)
+    assert "EqualTo(reading_date,2024-01-15)" in pushed
+    assert df.count() > 0
+    assert _overlapping_files(path, "reading_date", day, day) <= 2
