@@ -80,6 +80,28 @@ def exact_stddev(col: Column, scale: int = 100) -> Column:
     return F.when(n > 1, F.sqrt(num / (nd * (nd - 1))) / F.lit(float(scale)))
 
 
+def distinct_count(col: Column | str) -> Column:
+    """Exact ``count(DISTINCT col)`` as a one-pass set aggregate: the size
+    of ``collect_set`` (NULLs skipped, as count(DISTINCT) skips them),
+    cast to long like ``countDistinct``.
+
+    Catalyst rewrites ``countDistinct`` into an ``Expand`` (k+1 copies of
+    every row) or a second aggregation level, each with its own shuffle.
+    A set aggregate is an ordinary partial/final aggregate instead, so
+    the query keeps ONE exchange however many distinct counts it has.
+
+    Bound: one group's whole distinct set is held in one aggregation
+    buffer (and shipped in its partial rows). Use it only for dimension
+    columns whose per-group cardinality a dimension bounds — devices,
+    locations, environment types, load ids, days per device. Row-id-like
+    columns keep ``count(DISTINCT)``. The set makes it an
+    ObjectHashAggregate, which turns sort-based past
+    ``spark.sql.objectHashAggregate.sortBased.fallbackThreshold`` groups
+    per task: still exact, one exchange.
+    """
+    return F.size(F.collect_set(col)).cast("long")
+
+
 def sql_exact_avg(col: str, scale: int = 100) -> str:
     """DuckDB text equivalent of :func:`exact_avg` (SUM(BIGINT)→HUGEINT is
     automatically exact)."""

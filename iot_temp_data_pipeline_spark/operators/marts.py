@@ -9,7 +9,9 @@ B-tree indexes (`mart_temperature_readings.sql:4-12`); the Spark analog
 ``reading_date``, one per core — each file's footer min/max stats bound
 its day range, so day predicates skip whole files the way partition
 directories would, while every summary lists and opens only a handful of
-files.
+files. The summaries' distinct counts are single-shuffle set aggregates
+(``functions.stats.distinct_count``), under the per-group cardinality
+bound stated on that helper.
 
 The summary model's CTEs `load_level_stats`, `device_level_stats`,
 `location_level_stats`, `anomaly_analysis` are DEAD CODE in the reference
@@ -32,7 +34,7 @@ from ..functions.exprs import (
     environment_condition,
     temperature_category,
 )
-from ..functions.stats import exact_avg, exact_stddev
+from ..functions.stats import distinct_count, exact_avg, exact_stddev
 from ..sources.versioned import write_clustered
 
 # Frozen "today" for deterministic freshness bucketing (the fixture's
@@ -98,9 +100,9 @@ def load_level_stats(mart: DataFrame) -> DataFrame:
         exact_avg(F.col("data_quality_score"), 10).alias("avg_data_quality_score"),
         F.min("data_quality_score").alias("min_data_quality_score"),
         F.max("data_quality_score").alias("max_data_quality_score"),
-        F.countDistinct("device_id").alias("unique_devices"),
-        F.countDistinct("location").alias("unique_locations"),
-        F.countDistinct("environment_type").alias("unique_environments"),
+        distinct_count("device_id").alias("unique_devices"),
+        distinct_count("location").alias("unique_locations"),
+        distinct_count("environment_type").alias("unique_environments"),
         F.min("reading_timestamp").alias("earliest_reading"),
         F.max("reading_timestamp").alias("latest_reading"),
     )
@@ -127,9 +129,9 @@ def device_level_stats(mart: DataFrame) -> DataFrame:
         ((F.unix_micros(F.max(ts)) - F.unix_micros(F.min(ts))) / 3.6e9).alias(
             "reading_span_hours"
         ),
-        F.countDistinct(F.date_trunc("day", ts)).alias("active_days"),
-        F.countDistinct("location").alias("locations_visited"),
-        F.countDistinct("environment_type").alias("environments_recorded"),
+        distinct_count(F.date_trunc("day", ts)).alias("active_days"),
+        distinct_count("location").alias("locations_visited"),
+        distinct_count("environment_type").alias("environments_recorded"),
     )
 
 
@@ -143,7 +145,7 @@ def location_level_stats(mart: DataFrame) -> DataFrame:
         .groupBy("location", "environment_type")
         .agg(
             F.count("*").alias("total_readings"),
-            F.countDistinct("device_id").alias("unique_devices"),
+            distinct_count("device_id").alias("unique_devices"),
             exact_avg(t).alias("avg_temperature"),
             F.min(t).alias("min_temperature"),
             F.max(t).alias("max_temperature"),
@@ -175,10 +177,10 @@ def overall_stats(mart: DataFrame) -> DataFrame:
         exact_avg(F.col("data_quality_score"), 10).alias("global_avg_quality_score"),
         F.min("data_quality_score").alias("global_min_quality_score"),
         F.max("data_quality_score").alias("global_max_quality_score"),
-        F.countDistinct("device_id").alias("total_unique_devices"),
-        F.countDistinct("location").alias("total_unique_locations"),
-        F.countDistinct("environment_type").alias("total_environment_types"),
-        F.countDistinct("_dlt_load_id").alias("total_load_batches"),
+        distinct_count("device_id").alias("total_unique_devices"),
+        distinct_count("location").alias("total_unique_locations"),
+        distinct_count("environment_type").alias("total_environment_types"),
+        distinct_count("_dlt_load_id").alias("total_load_batches"),
         F.min(ts).alias("earliest_reading_timestamp"),
         F.max(ts).alias("latest_reading_timestamp"),
         ((F.unix_micros(F.max(ts)) - F.unix_micros(F.min(ts))) / 86400e6).alias(
@@ -282,8 +284,8 @@ def pipeline_run_report(
         F.sum(F.when(F.col("is_anomaly"), 1).otherwise(0)).alias(
             "anomaly_records"
         ),
-        F.countDistinct("device_id").alias("unique_devices"),
-        F.countDistinct("_dlt_load_id").alias("load_batches"),
+        distinct_count("device_id").alias("unique_devices"),
+        distinct_count("_dlt_load_id").alias("load_batches"),
     ).selectExpr(
         "'transform' AS stage",
         "stack(4, 'mart_rows', mart_rows, "

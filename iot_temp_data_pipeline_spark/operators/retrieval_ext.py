@@ -66,13 +66,13 @@ def _maxsim_reduce(
     The fixture's multi-vector layout is ``vec_id = tdoc·m + j``, so a
     query token's slot is ``q_vec % m`` — the per-query-token maxes are
     m conditional MAX aggregates in a single groupBy(q_tdoc, tdoc), and
-    the MaxSim score is their sum. Every (q, d) group carries all m
-    slots by construction (the catalyst/pooled streams join full token
-    sets; the matmul partials emit every slot per batch), and longs
-    make max-then-sum order-free, so the result is bit-identical to the
-    two-aggregate chain. Plan effect: the (q, d, q_vec)-keyed hash
-    aggregate pair — and, where the stream is not already partitioned
-    by q_tdoc (the exhaustive forms), its whole EXCHANGE — disappears;
+    the MaxSim score is their sum. A slot a (q, d) group lacks is a NULL
+    max and counts as 0, so the sum covers the slots that are present,
+    as the chain's does; longs make max-then-sum order-free, so the
+    result is bit-identical to the two-aggregate chain. Plan effect:
+    the (q, d, q_vec)-keyed hash aggregate pair — and, where the stream
+    is not already partitioned by q_tdoc (the exhaustive forms), its
+    whole EXCHANGE — disappears;
     the shuffle now carries one pre-aggregated row per (q, d) with m
     max columns instead of m rows."""
     tok_maxes = [
@@ -82,9 +82,10 @@ def _maxsim_reduce(
         for j in range(tokens_per_doc)
     ]
     sc = pairs.groupBy("q_tdoc", "tdoc").agg(*tok_maxes)
-    total = F.col("_tm_0")
-    for j in range(1, tokens_per_doc):
-        total = total + F.col(f"_tm_{j}")
+    slots = [F.coalesce(F.col(f"_tm_{j}"), F.lit(0)) for j in range(tokens_per_doc)]
+    total = slots[0]
+    for slot in slots[1:]:
+        total = total + slot
     sc = sc.select("q_tdoc", "tdoc", total.alias("maxsim_micros"))
     w = Window.partitionBy("q_tdoc").orderBy(
         F.col("maxsim_micros").desc(), F.col("tdoc")

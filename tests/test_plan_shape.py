@@ -514,3 +514,34 @@ def test_mart_day_filter_prunes_files(spark, written_mart):
     assert "EqualTo(reading_date,2024-01-15)" in pushed
     assert df.count() > 0
     assert _overlapping_files(path, "reading_date", day, day) <= 2
+
+
+def test_mart_summaries_single_exchange(spark, written_mart):
+    """Each report summary over the published mart executes as scan →
+    partial aggregate → ONE exchange → final aggregate: the distinct
+    counts are set aggregates, so Catalyst adds no Expand (k+1 copies of
+    every row) and no second aggregation level with its own shuffle."""
+    from iot_temp_data_pipeline_spark.operators.marts import (
+        anomaly_analysis,
+        device_level_stats,
+        load_level_stats,
+        location_level_stats,
+        pipeline_summary,
+    )
+
+    _, path = written_mart
+    for fn in (
+        load_level_stats,
+        device_level_stats,
+        location_level_stats,
+        pipeline_summary,
+        anomaly_analysis,
+    ):
+        df = fn(spark.read.parquet(path))
+        df.collect()
+        final_plan = plan_of(df).split("Final Plan", 1)[1]
+        final_plan = final_plan.split("Initial Plan", 1)[0]
+        assert "Expand" not in final_plan, fn.__name__
+        assert final_plan.count("Exchange") - final_plan.count(
+            "BroadcastExchange"
+        ) == 1, fn.__name__

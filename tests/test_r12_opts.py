@@ -87,12 +87,15 @@ def test_token_budget_pick_null_and_empty_text(spark):
 def test_maxsim_reduce_equals_two_level_aggregate(spark):
     """The m-conditional-max single aggregate (r12) must equal the old
     max-by-(q,d,q_vec)-then-sum chain bit-for-bit on a frame with
-    duplicate scores and negative values."""
+    duplicate scores and negative values, and on a (q, d) group missing
+    a token slot (the chain sums the slots that are present)."""
     m, k = 4, 3
     rows = []
     for q in (0, 4):  # q_tdoc values
         for d in (1, 2, 3):
             for j in range(m):
+                if (q, d, j) == (4, 2, 1):  # one group lacks slot 1
+                    continue
                 for dup in range(2):  # two doc tokens per slot
                     rows.append((q, d, q * m + j, (q + d * 7 - j * 3) * (dup + 1) - 5))
     pairs = spark.createDataFrame(
