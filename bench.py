@@ -44,11 +44,12 @@ Methodology:
   r1-r4-comparable number), floor_corrected_ratio.
 - Mart-table semantics: the reference materializes marts as TABLES
   (`dbt_project.yml:28-30`) and summary models read the table. The
-  registry mirrors that (`plans/registry.py` `_MART_CACHE`): the first
-  mart-derived query builds the mart parquet once per process, the
+  registry mirrors that (`plans/registry.py` `_mart_df`): the first
+  mart-derived query builds the mart parquet once per session and
+  version of the fixture files (`sources/catalog.get_or_build`), the
   other mart readers (summary_by_*, summary_overall, anomaly_breakdown,
   ops count) scan it. Since r7 the deduplicated-valid-readings table +
-  its stats digest are session-cached the same way (`_vr_cached`), so
+  its stats digest are cached the same way (`_vr_cached`), so
   `anomaly_scores_t2` measures the SERVING path (tagged in
   CACHE_CONSUMING below); the full build chain stays measured via
   `staging_readings` + `dedup_valid_readings` and inside each

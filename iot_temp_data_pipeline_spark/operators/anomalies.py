@@ -58,7 +58,7 @@ def int_temperature_anomalies(
 ) -> DataFrame:
     """``vr``: a pre-materialized deduplicated-valid-readings table
     (``deduplicated_valid_readings_aggform`` output, e.g. a
-    localCheckpoint the registry session-caches per sf_dir the way the
+    localCheckpoint the registry caches per version of sf_dir the way the
     mart table is). When given, the staging→dedup chain and the
     ``cache`` persist are skipped — the stats collect and the final
     enrichment both read the materialization directly, folding the
@@ -102,7 +102,7 @@ def anomaly_stats_digest(vr: DataFrame) -> DataFrame:
     separate Spark jobs over vr's lineage; each BroadcastExchange then
     materializes from driver-local data with no job at all. The digest
     is a TABLE STATISTIC of the vr materialization (the ANALYZE
-    analog), so the registry session-caches it alongside vr."""
+    analog), so the registry caches it alongside vr."""
     t = F.col("temperature_celsius")
     stats_dist = vr.groupingSets(
         [["device_id"], ["location"], ["environment_type"], []],

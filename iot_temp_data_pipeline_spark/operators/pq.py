@@ -49,8 +49,6 @@ PQ + recall checks).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -271,25 +269,22 @@ def train_codebook(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Codeboo
     """(quantized corpus, refined codebook). Two driver digests total:
     the NCENT seed rows and the ≤ M·NCENT refined centroid rows.
 
-    Session-cached per sf_dir: PQ training is the index-BUILD pass
+    Cached per version of sf_dir: PQ training is the index-BUILD pass
     (FAISS ``train()``), run once per corpus, not per query — the same
     build-once/serve-many lifecycle as similarity.quantized_corpus /
     ivf_index. Deterministic seed + one deterministic Lloyd step, so a
     cold cache reproduces the warm cache bit-for-bit (the DuckDB oracle
     retrains from scratch every run and still matches)."""
-    from ..sources.catalog import session_cache
+    from ..sources.catalog import get_or_build
     from .similarity import quantized_corpus
 
-    cache = session_cache(spark, "_sg_pq_codebook_cache")
-    key = os.path.abspath(sf_dir)
-    hit = cache.get(key)
-    if hit is None:
+    def build():
         corpus, _ = quantized_corpus(spark, sf_dir)
         q = _with_unit(corpus).localCheckpoint(eager=True)
         cb0 = _seed_codebook(q)
-        hit = (q, _refine(q, cb0))
-        cache[key] = hit
-    return hit
+        return (q, _refine(q, cb0))
+
+    return get_or_build(spark, "pq_codebook", sf_dir, build)
 
 
 def pq_codes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Codebook]:
@@ -298,16 +293,13 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Codebook]:
     table is WHAT A PQ INDEX IS; re-encoding the corpus per query would
     defeat the architecture. At 100 TB the codes are a written table
     (8 bytes/vector), here a localCheckpoint."""
-    from ..sources.catalog import session_cache
+    from ..sources.catalog import get_or_build
 
-    cache = session_cache(spark, "_sg_pq_codes_cache")
-    key = os.path.abspath(sf_dir)
-    hit = cache.get(key)
-    if hit is None:
+    def build():
         q, cb = train_codebook(spark, sf_dir)
-        hit = (pq_encode(q, cb).localCheckpoint(eager=True), cb)
-        cache[key] = hit
-    return hit
+        return (pq_encode(q, cb).localCheckpoint(eager=True), cb)
+
+    return get_or_build(spark, "pq_codes", sf_dir, build)
 
 
 def pq_encode(q: DataFrame, cb: Codebook, strategy: str = "auto") -> DataFrame:
@@ -749,7 +741,7 @@ def residual_pq_index(
     raw); the isotropy of the fixture itself is pinned by
     test_residual_fixture_isotropy_finding so a future fixture change
     re-opens the recall question."""
-    from ..sources.catalog import session_cache
+    from ..sources.catalog import get_or_build
     from .similarity import (
         MATMUL_ASSIGN_MIN_N,
         adaptive_centroid_mod,
@@ -757,10 +749,7 @@ def residual_pq_index(
         quantized_corpus,
     )
 
-    cache = session_cache(spark, "_sg_ivfpq_residual_cache")
-    key = os.path.abspath(sf_dir)
-    hit = cache.get(key)
-    if hit is None:
+    def build():
         _, n = quantized_corpus(spark, sf_dir)
         centroid_mod = adaptive_centroid_mod(n)
         assign = "matmul" if n >= MATMUL_ASSIGN_MIN_N else "hof"
@@ -786,9 +775,9 @@ def residual_pq_index(
             .join(res.select("vec_id", "cell_id"), "vec_id")
             .localCheckpoint(eager=True)
         )
-        hit = (enc, cb, cent, ucent, q)
-        cache[key] = hit
-    return hit
+        return (enc, cb, cent, ucent, q)
+
+    return get_or_build(spark, "ivfpq_residual", sf_dir, build)
 
 
 def knn_ivfpq_residual(

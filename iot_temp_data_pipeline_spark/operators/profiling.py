@@ -489,7 +489,7 @@ def _cdf_from_cents_tab(cents_tab: DataFrame) -> DataFrame:
 
 def events_cents_cdf(spark, sf_dir: str) -> DataFrame:
     """The shared cents-CDF table statistic (event_type, cents, cnt, n,
-    cum) of events.value, built ONCE per (session, sf_dir) and
+    cum) of events.value, built ONCE per version of sf_dir and
     localCheckpoint'ed — the artifact the robust-statistics family
     (median/MAD, trimmed mean, winsorization) reads instead of each
     re-scanning and re-grouping the raw events (VERDICT r7 #1). Exact
@@ -499,19 +499,14 @@ def events_cents_cdf(spark, sf_dir: str) -> DataFrame:
     (the ANALYZE analog, same lifecycle as the anomaly stats digest and
     the near-dup pair table); `winsorize_values` deliberately bypasses
     it so the build path stays measured in the bench."""
-    import os as _os
+    from ..sources.catalog import get_or_build, load_table
 
-    from ..sources.catalog import load_table, session_cache
-
-    cache = session_cache(spark, "_sg_cents_cdf")
-    key = _os.path.abspath(sf_dir)
-    hit = cache.get(key)
-    if hit is None:
-        hit = _cdf_from_cents_tab(
+    return get_or_build(
+        spark, "cents_cdf", sf_dir,
+        lambda: _cdf_from_cents_tab(
             _cents_tab_of(load_table(spark, sf_dir, "events"))
-        ).localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
+        ).localCheckpoint(eager=True),
+    )
 
 
 def trimmed_mean_events(events: DataFrame, trim_pct: int = TRIM_PCT) -> DataFrame:

@@ -29,12 +29,11 @@ is far below any meaningful similarity resolution.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table
+from ..sources.catalog import get_or_build, load_table
 
 QUANT_SCALE = 1_000_000
 MIN_CENTROID_MOD = 37
@@ -108,30 +107,25 @@ def quantized_corpus(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, int]:
     """(quantized+normed embeddings, row count), materialized ONCE per
-    session and sf_dir. Every ANN entry point starts by quantizing and
+    version of sf_dir's files. Every ANN entry point starts by quantizing and
     norming the same immutable embedding table; recomputing that per
     query (and re-counting for the cost-based strategy picks) is the
     per-query analog of rebuilding an index per SELECT. The vector-DB
     shape is build-once/serve-many — FAISS ``train()+add()`` runs once,
     then queries reuse the structure — so this caches the quantized
     corpus as a ``localCheckpoint`` (survives ``catalog.clearCache()``,
-    which only drops SQL-cached relations) keyed by sf_dir, plus its
+    which only drops SQL-cached relations) per version of sf_dir, plus its
     count (a table statistic, the ANALYZE analog). At 100 TB the
     checkpoint becomes a written index/table — same lifecycle, storage
     instead of block manager. Deterministic derivation, so cold- and
     warm-cache results are identical (the parity suite runs both)."""
-    from ..sources.catalog import session_cache
-
-    cache = session_cache(spark, "_sg_ann_corpus_cache")
-    key = os.path.abspath(sf_dir)
-    hit = cache.get(key)
-    if hit is None:
+    def build():
         df = _with_quantized(
             load_table(spark, sf_dir, "embeddings")
         ).localCheckpoint(eager=True)
-        hit = (df, df.count())
-        cache[key] = hit
-    return hit
+        return (df, df.count())
+
+    return get_or_build(spark, "ann_corpus", sf_dir, build)
 
 
 # SQL twins ------------------------------------------------------------
@@ -262,17 +256,13 @@ def ground_truth_topk(
     parameter that shapes the result; deterministic derivation, so
     cold and warm caches agree (the DuckDB oracles rebuild from
     scratch every run and still hash-match)."""
-    from ..sources.catalog import session_cache
-
-    cache = session_cache(spark, "_sg_ann_ground_truth")
-    key = (os.path.abspath(sf_dir), query_mod, k)
-    hit = cache.get(key)
-    if hit is None:
-        hit = knn_brute_force(spark, sf_dir, query_mod, k).localCheckpoint(
+    return get_or_build(
+        spark, "ann_ground_truth", sf_dir,
+        lambda: knn_brute_force(spark, sf_dir, query_mod, k).localCheckpoint(
             eager=True
-        )
-        cache[key] = hit
-    return hit
+        ),
+        query_mod, k,
+    )
 
 
 def knn_brute_force_matmul(
@@ -419,12 +409,7 @@ def ivf_index(
     pass, not per query). ``localCheckpoint`` keeps the assignment
     across ``catalog.clearCache()``; the derivation is deterministic so
     cold and warm caches agree bit-for-bit."""
-    from ..sources.catalog import session_cache
-
-    cache = session_cache(spark, "_sg_ivf_index_cache")
-    key = (os.path.abspath(sf_dir), centroid_mod, assign)
-    hit = cache.get(key)
-    if hit is None:
+    def build():
         emb, _ = quantized_corpus(spark, sf_dir)
         assigner = (
             ivf_cell_assignments_matmul
@@ -432,9 +417,9 @@ def ivf_index(
             else ivf_cell_assignments
         )
         assigned, cent = assigner(emb, centroid_mod)
-        hit = (assigned.localCheckpoint(eager=True), cent)
-        cache[key] = hit
-    return hit
+        return (assigned.localCheckpoint(eager=True), cent)
+
+    return get_or_build(spark, "ivf_index", sf_dir, build, centroid_mod, assign)
 
 
 def ivf_cell_assignments(
@@ -1047,15 +1032,10 @@ def embedding_corpus_count(spark: SparkSession, sf_dir: str) -> int:
     Only the COUNT is cached (the dedup operators' data passes stay
     fully measured); it is exact, not estimated, so the adaptive
     centroid sizing matches the oracle's COUNT(*)-derived mod."""
-    from ..sources.catalog import session_cache
-
-    cache = session_cache(spark, "_sg_emb_corpus_count")
-    key = os.path.abspath(sf_dir)
-    n = cache.get(key)
-    if n is None:
-        n = embedding_corpus(spark, sf_dir).count()
-        cache[key] = n
-    return n
+    return get_or_build(
+        spark, "emb_corpus_count", sf_dir,
+        lambda: embedding_corpus(spark, sf_dir).count(),
+    )
 
 
 EMB_CORPUS_SQL = f"""
@@ -1159,21 +1139,15 @@ def semdedup_cell_index(
     paths index the plain embeddings; dedup indexes the corpus that
     actually contains near-duplicates). Deterministic derivation —
     cold/warm identical, oracle rebuilt from scratch still matches."""
-    import os as _os
-
-    from ..sources.catalog import session_cache
-
     n = embedding_corpus_count(spark, sf_dir)
     mod = centroid_mod if centroid_mod is not None else adaptive_centroid_mod(n)
-    cache = session_cache(spark, "_sg_semdedup_index")
-    key = (_os.path.abspath(sf_dir), mod)
-    hit = cache.get(key)
-    if hit is None:
+
+    def build():
         emb = _with_quantized(embedding_corpus(spark, sf_dir))
         assigned, _ = cost_based_cell_assignments(emb, mod, n=n)
-        hit = assigned.localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
+        return assigned.localCheckpoint(eager=True)
+
+    return get_or_build(spark, "semdedup_index", sf_dir, build, mod)
 
 
 def semantic_dedup(
@@ -1912,18 +1886,13 @@ def embedding_space_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     the second aggregate paid another fixed stage launch. The corpus
     is never shuffled on content."""
     from ..functions.stats import exact_long_sum
-    from ..sources.catalog import session_cache
-
     # the ≤64-row moment digest is a TABLE STATISTIC of the quantized
-    # corpus (the ANALYZE analog), so it is session-cached alongside it
-    # — same lifecycle as the anomaly chain's GROUPING SETS digest
-    cache = session_cache(spark, "_sg_embdiag_digest")
-    ckey = os.path.abspath(sf_dir)
-    per_dim = cache.get(ckey)
-    if per_dim is None:
+    # corpus (the ANALYZE analog), so it is cached alongside it — same
+    # lifecycle as the anomaly chain's GROUPING SETS digest
+    def build():
         emb, _ = quantized_corpus(spark, sf_dir)
         v = F.col("v")
-        per_dim = (
+        return (
             emb.select(F.posexplode(F.col("qvec")).alias("dim", "v"))
             .groupBy("dim")
             .agg(
@@ -1932,7 +1901,8 @@ def embedding_space_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
                 exact_long_sum(v * v).alias("s2"),
             )
         ).collect()
-        cache[ckey] = per_dim
+
+    per_dim = get_or_build(spark, "embdiag_digest", sf_dir, build)
 
     # JVM-side literal projection, not a Python-list createDataFrame
     # (RDD-backed, one Python-worker roundtrip ≈ a scheduling floor)

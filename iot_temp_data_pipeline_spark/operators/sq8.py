@@ -35,8 +35,6 @@ LSH / PQ).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -69,16 +67,13 @@ def sq8_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached SQ8 code table — the stored index (build-once/
     serve-many, same lifecycle as pq.pq_codes; at 100 TB a written
     table of 64-byte rows)."""
-    from ..sources.catalog import session_cache
+    from ..sources.catalog import get_or_build
 
-    cache = session_cache(spark, "_sg_sq8_index_cache")
-    key = os.path.abspath(sf_dir)
-    hit = cache.get(key)
-    if hit is None:
+    def build():
         emb, _ = quantized_corpus(spark, sf_dir)
-        hit = sq8_encode(emb).localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
+        return sq8_encode(emb).localCheckpoint(eager=True)
+
+    return get_or_build(spark, "sq8_index", sf_dir, build)
 
 
 def ivfsq8_enc_index(
@@ -102,23 +97,21 @@ def ivfsq8_enc_index(
         ivf_index,
         quantized_corpus,
     )
-    from ..sources.catalog import session_cache
+    from ..sources.catalog import get_or_build
 
     emb, n = quantized_corpus(spark, sf_dir)
     if centroid_mod is None:
         centroid_mod = adaptive_centroid_mod(n)
-    cache = session_cache(spark, "_sg_ivfsq8_enc_cache")
-    key = (os.path.abspath(sf_dir), centroid_mod)
-    hit = cache.get(key)
-    if hit is None:
+
+    def build():
         assign = "matmul" if n >= MATMUL_ASSIGN_MIN_N else "hof"
         assigned, _ = ivf_index(spark, sf_dir, centroid_mod, assign)
         codes = sq8_index(spark, sf_dir)
-        hit = codes.join(
+        return codes.join(
             assigned.select("vec_id", "cell_id"), "vec_id"
         ).localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
+
+    return get_or_build(spark, "ivfsq8_enc", sf_dir, build, centroid_mod)
 
 
 def knn_sq8_served(
@@ -134,17 +127,13 @@ def knn_sq8_served(
     :func:`sq8_index` and ``similarity.ground_truth_topk``: knn_sq8 is
     a pure function of the corpus, so cold and warm caches agree and
     the from-scratch DuckDB oracle still hash-matches."""
-    from ..sources.catalog import session_cache
+    from ..sources.catalog import get_or_build
 
-    cache = session_cache(spark, "_sg_sq8_topk_cache")
-    key = (os.path.abspath(sf_dir), query_mod, k)
-    hit = cache.get(key)
-    if hit is None:
-        hit = knn_sq8(spark, sf_dir, query_mod, k).localCheckpoint(
-            eager=True
-        )
-        cache[key] = hit
-    return hit
+    return get_or_build(
+        spark, "sq8_topk", sf_dir,
+        lambda: knn_sq8(spark, sf_dir, query_mod, k).localCheckpoint(eager=True),
+        query_mod, k,
+    )
 
 
 def _code_dot(a, b):

@@ -500,23 +500,17 @@ def cached_winnowing_fps(spark, sf_dir: str, w: int = WINNOW_W) -> DataFrame:
     cached_repeated_spans. The fingerprint BUILD stays bench-measured
     via the doc_fingerprints_winnowing query, which bypasses this
     cache."""
-    import os as _os
-
     from ..operators.dedup import dedup_corpus
-    from ..sources.catalog import session_cache
+    from ..sources.catalog import get_or_build
 
-    cache = session_cache(spark, "_sg_winnow_fps")
-    key = (_os.path.abspath(sf_dir), w)
-    hit = cache.get(key)
-    if hit is None:
-        hit = (
-            winnowing_fingerprints(dedup_corpus(spark, sf_dir), w)
-            .select("doc_id", "fp_hash")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        cache[key] = hit
-    return hit
+    return get_or_build(
+        spark, "winnow_fps", sf_dir,
+        lambda: winnowing_fingerprints(dedup_corpus(spark, sf_dir), w)
+        .select("doc_id", "fp_hash")
+        .distinct()
+        .localCheckpoint(eager=True),
+        w,
+    )
 
 
 def winnowing_pair_index(
@@ -588,19 +582,15 @@ def cached_winnowing_pairs(spark, sf_dir: str, w: int = WINNOW_W) -> DataFrame:
     which bypasses this cache; the overlap report and the detector
     quality eval serve from it. Bounded by pairs sharing ≥ min_shared
     fingerprints — report-sized, far below corpus²."""
-    import os as _os
+    from ..sources.catalog import get_or_build
 
-    from ..sources.catalog import session_cache
-
-    cache = session_cache(spark, "_sg_winnow_pairs")
-    key = (_os.path.abspath(sf_dir), w)
-    hit = cache.get(key)
-    if hit is None:
-        hit = winnowing_pair_index(
+    return get_or_build(
+        spark, "winnow_pairs", sf_dir,
+        lambda: winnowing_pair_index(
             cached_winnowing_fps(spark, sf_dir, w)
-        ).localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
+        ).localCheckpoint(eager=True),
+        w,
+    )
 
 
 def winnowing_overlap_pairs(

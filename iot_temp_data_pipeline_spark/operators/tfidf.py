@@ -27,13 +27,12 @@ oracle hash-matches bit-for-bit.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles_of_tokens, tokens
 from ..maintenance import materialize_bucketed
+from ..sources.catalog import get_or_build, load_table
 from .dedup import CORPUS_SQL, MAX_SHINGLE_DF, dedup_corpus
 
 IDF_SCALE = 1000
@@ -52,43 +51,16 @@ BROADCAST_DOC_MAX = 100_000
 def _doc_count(spark: SparkSession, sf_dir: str) -> int:
     """Session-cached documents row count (table statistic, the ANALYZE
     analog — same lifecycle as similarity.embedding_corpus_count)."""
-    from ..sources.catalog import load_table as _lt
-    from ..sources.catalog import session_cache
-
-    cache = session_cache(spark, "_sg_doc_count")
-    key = os.path.abspath(sf_dir)
-    if key not in cache:
-        cache[key] = _lt(spark, sf_dir, "documents").count()
-    return cache[key]
+    return get_or_build(
+        spark, "doc_count", sf_dir,
+        lambda: load_table(spark, sf_dir, "documents").count(),
+    )
 
 
 def _query_side_hint(spark: SparkSession, sf_dir: str):
     if _doc_count(spark, sf_dir) <= BROADCAST_DOC_MAX:
         return F.broadcast
     return lambda df: df
-
-
-def _cached_index(spark: SparkSession, attr: str, key, build):
-    """Session-cached inverted-index materialization: postings tables
-    are the stored INDEX of a sparse-retrieval system — Lucene builds
-    segments at ingest, not per query — so they share the
-    build-once/serve-many lifecycle of similarity.quantized_corpus /
-    ivf_index. ``localCheckpoint`` survives ``catalog.clearCache()``;
-    the build is deterministic, so cold and warm caches agree (the
-    DuckDB oracle rebuilds from scratch every run and still matches).
-    ``key`` must carry EVERY build parameter (sf_dir plus n/max_df/…),
-    mirroring ivf_index's (sf_dir, centroid_mod, assign) key — an
-    sf_dir-only key would silently serve an index built with another
-    call's parameters. At 100 TB the postings are a written table
-    bucketed by term."""
-    from ..sources.catalog import session_cache
-
-    cache = session_cache(spark, attr)
-    hit = cache.get(key)
-    if hit is None:
-        hit = build().localCheckpoint(eager=True)
-        cache[key] = hit
-    return hit
 
 
 def doc_postings(corpus: DataFrame, n: int = 3, max_df: int = MAX_SHINGLE_DF) -> DataFrame:
@@ -168,11 +140,11 @@ def tfidf_topk(
     == 0), over the dedup corpus (originals + exact + truncated
     replicas — so queries have known high-similarity hits). Docs sharing
     no surviving term with a query are never scored (that's the index)."""
-    postings = _cached_index(
-        spark,
-        "_sg_tfidf_index",
-        (os.path.abspath(sf_dir), n, max_df),
-        lambda: doc_postings(dedup_corpus(spark, sf_dir), n, max_df),
+    postings = get_or_build(
+        spark, "tfidf_index", sf_dir,
+        lambda: doc_postings(dedup_corpus(spark, sf_dir), n, max_df)
+        .localCheckpoint(eager=True),
+        n, max_df,
     )
     norms = postings.groupBy("doc_id").agg(
         F.sum(F.col("tf") * F.col("tf") * F.col("w")).alias("norm2")
@@ -289,14 +261,18 @@ def bm25_postings(corpus: DataFrame) -> DataFrame:
 
 
 def _cached_bm25_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The session-cached BM25 inverted index — one cache key, one
-    build lambda, shared by every consumer (bm25_topk, the impact-
-    pruned variants, hybrid fusion) so the index can never fork."""
-    return _cached_index(
-        spark,
-        "_sg_bm25_index",
-        os.path.abspath(sf_dir),
-        lambda: bm25_postings(dedup_corpus(spark, sf_dir)),
+    """The cached BM25 inverted index — one cache key, one build
+    lambda, shared by every consumer (bm25_topk, the impact-pruned
+    variants, hybrid fusion) so the index can never fork. Postings
+    tables are the stored INDEX of a sparse-retrieval system — Lucene
+    builds segments at ingest, not per query — so they share the
+    build-once/serve-many lifecycle of similarity.quantized_corpus /
+    ivf_index. At 100 TB the postings are a written table bucketed by
+    term."""
+    return get_or_build(
+        spark, "bm25_index", sf_dir,
+        lambda: bm25_postings(dedup_corpus(spark, sf_dir))
+        .localCheckpoint(eager=True),
     )
 
 
@@ -308,13 +284,12 @@ def _cached_bm25_avgdl(
     of re-running a postings-wide groupBy(doc_id) exchange on every
     serve call. One definition site (review r10): the statistic and
     its cache key can never diverge between consumers."""
-    return _cached_index(
-        spark,
-        "_sg_bm25_avgdl",
-        os.path.abspath(sf_dir),
+    return get_or_build(
+        spark, "bm25_avgdl", sf_dir,
         lambda: postings.groupBy("doc_id")
         .agg(F.first("dl").alias("dl"))
-        .agg(F.expr("div(1000 * sum(dl), count(*))").alias("a_milli")),
+        .agg(F.expr("div(1000 * sum(dl), count(*))").alias("a_milli"))
+        .localCheckpoint(eager=True),
     )
 
 
@@ -632,11 +607,7 @@ def _cached_bm25_pairwork(
     like avgdl (one aggregate riding the cached index, collected as a
     single driver-side long; the ANALYZE lifecycle, not a hot-path
     collect)."""
-    from ..sources.catalog import session_cache
-
-    cache = session_cache(spark, "_sg_bm25_pairwork")
-    key = (os.path.abspath(sf_dir), query_mod)
-    if key not in cache:
+    def build():
         postings = _cached_bm25_postings(spark, sf_dir)
         per_term = postings.groupBy("term").agg(
             F.count("*").alias("df"),
@@ -647,8 +618,9 @@ def _cached_bm25_pairwork(
         row = per_term.agg(
             F.sum(F.col("df") * F.col("df_q")).alias("pairs")
         ).collect()[0]
-        cache[key] = int(row["pairs"] or 0)
-    return cache[key]
+        return int(row["pairs"] or 0)
+
+    return get_or_build(spark, "bm25_pairwork", sf_dir, build, query_mod)
 
 
 def bm25_serve_topk(

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.catalog import load_table
+from ..sources.catalog import get_or_build, load_table
 from ..sources.formats import (
     merge_upsert_partitioned,
     read_jsonl,
@@ -146,9 +146,6 @@ UPSERT_WINDOW = ("2024-01-05", "2024-01-09")
 UPSERT_BUMP = 1000
 INSERT_KEY_SHIFT = 1_000_000_000_000
 
-# per-process template of the pre-built base table, keyed by sf_dir
-_UPSERT_BASE_CACHE: dict[str, str] = {}
-
 UPSERT_SPEC = [
     ("event_type", ""),
     ("n", "long"),
@@ -174,14 +171,12 @@ def upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The pre-existing base table is test FIXTURE, not the operator
     # under test (a real MERGE runs against a table that already
-    # exists). Build it once per (process, sf_dir) and give each
+    # exists). Build it once per version of sf_dir and give each
     # invocation a fresh copy (tmpfs copytree, milliseconds), so
     # repeated runs measure the merge, not re-creating the table.
     import shutil
 
-    key = os.path.abspath(sf_dir)
-    template = _UPSERT_BASE_CACHE.get(key)
-    if template is None:
+    def build():
         template = f"{workdir('upsert_base')}/events_table"
         # Co-locate each date's rows before the partitioned write:
         # without this every shuffle partition emits a file into every
@@ -191,7 +186,9 @@ def upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.repartition(F.col("event_date")).write.partitionBy(
             "event_date"
         ).parquet(template)
-        _UPSERT_BASE_CACHE[key] = template
+        return template
+
+    template = get_or_build(spark, "upsert_base", sf_dir, build)
     work = workdir("upsert")
     table_dir = f"{work}/events_table"
     shutil.copytree(template, table_dir)

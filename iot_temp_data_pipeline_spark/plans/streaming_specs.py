@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.catalog import load_table
+from ..sources.catalog import get_or_build, load_table
 from ..streaming.core import materialize_landing, run_available_now, workdir
 from ..streaming.dedup import streaming_dedup
 from ..streaming.joins import (
@@ -44,17 +44,10 @@ from .relational import INGEST_SPEC, INGEST_SQL, _kaggle_like
 
 # The CSV landing zone is test FIXTURE (the files the stream ingests),
 # not part of the streaming operator under test — build it once per
-# (process, sf_dir); every invocation still gets a FRESH checkpoint and
+# version of sf_dir; every invocation still gets a FRESH checkpoint and
 # sink, which is the exactly-once machinery being exercised.
-_LANDING_CACHE: dict[str, str] = {}
-
-
 def _cached_landing(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    key = os.path.abspath(sf_dir)
-    landing = _LANDING_CACHE.get(key)
-    if landing is None:
+    def build():
         landing = f"{workdir('ingest_landing')}/landing"
         # 16 landing files (not the 4-file default): with
         # maxFilesPerTrigger=8 each micro-batch still exists (2 batches,
@@ -67,8 +60,9 @@ def _cached_landing(spark: SparkSession, sf_dir: str) -> str:
         # "Sink FileSink[...] does not support async progress tracking")
         # — the irreducible exactly-once cost, see BASELINE.md.
         materialize_landing(_kaggle_like(spark, sf_dir), landing, n_files=16)
-        _LANDING_CACHE[key] = landing
-    return landing
+        return landing
+
+    return get_or_build(spark, "ingest_landing", sf_dir, build)
 
 
 def _streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -152,14 +152,17 @@ class SyntheticEventsDataSource(DataSource):
 def register(spark) -> None:
     # Python-source filter pushdown is opt-in (runtime-settable conf);
     # without it Spark refuses a reader that implements pushFilters.
-    # Idempotent and cached: re-registration is harmless but costs a
-    # JVM round-trip per call on a hot path.
-    if getattr(spark, "_sg_synth_events_registered", False):
-        return
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(SyntheticEventsDataSource)
-    spark.dataSource.register(SyntheticEventsDistDataSource)
-    spark._sg_synth_events_registered = True
+    # Once per session: re-registration is harmless but costs a JVM
+    # round-trip per call on a hot path.
+    from .catalog import get_or_build
+
+    def build():
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+        spark.dataSource.register(SyntheticEventsDataSource)
+        spark.dataSource.register(SyntheticEventsDistDataSource)
+        return True
+
+    get_or_build(spark, "synthetic_events_registered", None, build)
 
 
 def load_synthetic_events(spark, n_rows: int, n_partitions: int = 8):
@@ -169,21 +172,17 @@ def load_synthetic_events(spark, n_rows: int, n_partitions: int = 8):
     DataFrame is a reusable logical plan — cache it per session/options
     exactly like catalog.load_table does for parquet tables. Execution
     still scans the source; only plan construction is reused."""
-    from .catalog import session_cache
+    from .catalog import get_or_build
 
     register(spark)
-    cache = session_cache(spark, "_sg_synth_events_cache")
-    key = (n_rows, n_partitions)
-    df = cache.get(key)
-    if df is None:
-        df = (
-            spark.read.format("synthetic_events")
-            .option("n_rows", n_rows)
-            .option("n_partitions", n_partitions)
-            .load()
-        )
-        cache[key] = df
-    return df
+    return get_or_build(
+        spark, "synthetic_events", None,
+        lambda: spark.read.format("synthetic_events")
+        .option("n_rows", n_rows)
+        .option("n_partitions", n_partitions)
+        .load(),
+        n_rows, n_partitions,
+    )
 
 
 # ----------------------------------------------------------- writer side
