@@ -20,8 +20,10 @@ from pyspark.sql import functions as F
 
 from ..functions.stats import exact_long_sum
 
+from ..operators import governance as gov
+from ..operators import profiling as pf
 from ..sources.catalog import load_table
-from .registry import QuerySpec, shape, sql_select
+from .registry import ColSpec, QuerySpec, shape, sql_select
 
 _DEC = "decimal(38,0)"
 _SQL_PI = "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
@@ -759,3 +761,51 @@ def _emb_drift_oracle() -> str:
 ANALYTICS["drift_embedding_centroids"] = QuerySpec(
     _embedding_drift, _emb_drift_oracle()
 )
+
+
+# --------------------------------------------------- exact trimmed mean
+
+TRIMMED_SPEC: ColSpec = [
+    ("event_type", ""),
+    ("n", "long"),
+    ("trim_k", "long"),
+    ("trimmed_n", "long"),
+    ("trimmed_sum_cents", "long"),
+    ("trimmed_mean_millicents", "long"),
+]
+
+
+def _trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # serve path over the session-cached cents-CDF table statistic
+    # (shared with mad_outlier_gate) — VERDICT r7 #1
+    return shape(
+        pf.trimmed_mean_from_cdf(pf.events_cents_cdf(spark, sf_dir)),
+        TRIMMED_SPEC,
+    )
+
+
+TRIMMED_ORACLE = sql_select(TRIMMED_SPEC, pf.trimmed_mean_events_sql("events"))
+
+ANALYTICS["trimmed_mean_events"] = QuerySpec(_trimmed_mean, TRIMMED_ORACLE)
+
+
+# ------------------------------------------------- t-closeness audit
+
+TCLOSE_SPEC: ColSpec = [
+    ("nationkey", "long"),
+    ("acctbal_band", "long"),
+    ("class_size", "long"),
+    ("t_ppm", "long"),
+]
+
+
+def _t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return shape(
+        gov.t_closeness_audit(load_table(spark, sf_dir, "customer")),
+        TCLOSE_SPEC,
+    )
+
+
+TCLOSE_ORACLE = sql_select(TCLOSE_SPEC, gov.t_closeness_audit_sql())
+
+ANALYTICS["t_closeness_audit"] = QuerySpec(_t_closeness, TCLOSE_ORACLE)

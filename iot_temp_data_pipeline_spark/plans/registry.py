@@ -610,14 +610,10 @@ REGISTRY: dict[str, QuerySpec] = {
 from ..operators.asof import ASOF_SQL, last_click_before_error  # noqa: E402
 from ..operators.rangejoin import RANGEJOIN_SQL, clicks_in_error_windows  # noqa: E402
 from .analytics import ANALYTICS  # noqa: E402
+from .corpus_specs import CORPUS  # noqa: E402
 from .extensions import EXTENSIONS  # noqa: E402
-from .extensions_r7 import EXTENSIONS_R7  # noqa: E402
-from .extensions_r8 import EXTENSIONS_R8  # noqa: E402
-from .extensions_r9 import EXTENSIONS_R9  # noqa: E402
-from .extensions_r10 import EXTENSIONS_R10  # noqa: E402
-from .extensions_r11 import EXTENSIONS_R11  # noqa: E402
-from .extensions_r12 import EXTENSIONS_R12  # noqa: E402
 from .relational import RELATIONAL  # noqa: E402
+from .retrieval_specs import RETRIEVAL  # noqa: E402
 from .streaming_specs import STREAMING  # noqa: E402
 from .subqueries import SUBQUERIES  # noqa: E402
 from .formats_specs import FORMATS  # noqa: E402
@@ -632,561 +628,7 @@ REGISTRY.update(TPCH_EXTRA)
 REGISTRY.update(FORMATS)
 REGISTRY.update(TIMESERIES)
 REGISTRY.update(ANALYTICS)
-REGISTRY.update(EXTENSIONS_R7)
-REGISTRY.update(EXTENSIONS_R8)
-REGISTRY.update(EXTENSIONS_R9)
-REGISTRY.update(EXTENSIONS_R10)
-REGISTRY.update(EXTENSIONS_R11)
-REGISTRY.update(EXTENSIONS_R12)
+REGISTRY.update(RETRIEVAL)
+REGISTRY.update(CORPUS)
 REGISTRY["events_asof_last_click"] = QuerySpec(last_click_before_error, ASOF_SQL)
 REGISTRY["clicks_in_error_windows"] = QuerySpec(clicks_in_error_windows, RANGEJOIN_SQL)
-
-# Driver-run ordering. The driver verifies ~50 registry entries per
-# round in dict order; cumulative coverage after rounds 1+2 is 99/114
-# (union of CORRECTNESS_r01/r02.json keys, frozen below). Round 3 puts
-# every never-driver-verified query FIRST — the 15 known stragglers
-# (all 10 streaming_* plus asof/rangejoin/pivot/profile/HLL) and any
-# query newly added this round — so one 50-query sample closes driver
-# verification to 114/114. Local pytest
-# (`tests/test_registry_parity.py`) still checks all entries every run.
-_DRIVER_VERIFIED_R0102 = {
-    "ann_recall_check", "anomaly_breakdown", "anomaly_scores",
-    "anomaly_scores_t2", "approx_percentile_check", "chunk_documents_cdc",
-    "continuous_daily_rollup", "custom_source_device_stats", "customer_order_windows",
-    "decontaminate_ngram_overlap", "dedup_chunk_overlap", "dedup_clusters_ngram",
-    "dedup_clusters_star", "dedup_embedding_cosine", "dedup_exact",
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash_pairs",
-    "dedup_valid_readings", "dedup_valid_readings_aggform", "doc_fingerprints_bottomk",
-    "domain_cap_sample", "domain_cap_threshold", "dq_check_violations",
-    "event_value_percentiles", "events_hourly_tumbling", "events_json_props",
-    "events_moving_avg_7d", "events_resample_hourly_ffill", "events_session_windows",
-    "events_sliding_window", "funnel_ordered_stages", "ingest_audit_log",
-    "ingest_kaggle_transform", "jsonl_roundtrip", "kmeans_embedding_clusters",
-    "knn_brute_force_cosine", "knn_ivf_cosine", "knn_lsh_cosine",
-    "lang_id_confusion", "lang_sampling_weights", "mart_readings",
-    "mg_heavy_hitters_check", "multimodal_frame_sample", "multimodal_media_metadata",
-    "multimodal_resize_images", "nation_priority_unpivot", "ops_anomaly_count_per_device",
-    "orc_roundtrip", "pack_sequences_grid", "pagerank_dedup_graph",
-    "part_setops", "pii_redaction", "quality_repetition_rules",
-    "retention_filter", "revenue_cube", "revenue_rollup",
-    "scd2_user_history", "schema_evolution_read", "simhash_fingerprints",
-    "sql_api_regional_revenue", "staging_readings", "stratified_sample_check",
-    "summary_by_device", "summary_by_load", "summary_by_location",
-    "summary_overall", "synthetic_fields_contract", "text_stats",
-    "tfidf_topk", "top_bigrams", "topk_orders",
-    "tpch_q10_returned_items", "tpch_q11_important_stock", "tpch_q12_priority_by_returnflag",
-    "tpch_q13_customer_distribution", "tpch_q14_promo_effect", "tpch_q15_top_supplier",
-    "tpch_q16_supplier_counts", "tpch_q17_small_quantity_revenue", "tpch_q18_large_volume_customers",
-    "tpch_q19_disjunctive_revenue", "tpch_q1_pricing_summary", "tpch_q20_part_promotion",
-    "tpch_q21_suppliers_who_kept_waiting", "tpch_q22_global_sales_opportunity", "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping_priority", "tpch_q4_order_priority", "tpch_q5_regional_revenue",
-    "tpch_q6_forecast_revenue", "tpch_q7_volume_shipping", "tpch_q8_market_share",
-    "tpch_q9_product_type_profit", "training_corpus_prep", "union_ops_counts",
-    "upsert_merge", "value_trend_by_type", "window_temperature_deltas",
-}
-# Queries whose latest driver row is from round 3 (CORRECTNESS_r03.json
-# keys, frozen). Together with _DRIVER_VERIFIED_R0102 this gives every
-# query a last-verified round, so the ordering can rotate FRESHNESS.
-# Honest restatement of the rotation bound (VERDICT r10 #1): with a
-# ~50-row driver sample and ~248 registered queries, the achievable
-# worst-case staleness is ⌈(N − changed) / (50 − changed)⌉ ≈ 5 rounds,
-# not the 2 this comment used to promise — PROVIDED staleness actually
-# dominates the rest-block ordering (fixed below: through r10 the
-# global batch-first tiebreak starved streaming rows of slots).
-# The local parity suite (tests/test_registry_parity.py) still
-# hash-checks all queries every round, so driver staleness is about
-# independent re-witness, not about anything going unverified.
-_DRIVER_VERIFIED_R03 = {
-    "analyze_table_stats", "anomaly_breakdown", "anomaly_scores",
-    "anomaly_scores_t2", "approx_distinct_users", "clicks_in_error_windows",
-    "dedup_clusters_star", "dedup_valid_readings", "dedup_valid_readings_aggform",
-    "dq_check_violations", "events_asof_last_click", "ingest_audit_log",
-    "jdbc_roundtrip", "kmeans_embedding_clusters", "knn_ivf_cosine",
-    "mart_readings", "mg_heavy_hitters_check", "multimodal_decode_headers",
-    "multimodal_media_metadata", "multimodal_resize_images", "nation_priority_pivot",
-    "ops_anomaly_count_per_device", "pack_sequences_grid", "pagerank_dedup_graph",
-    "profile_events_columns", "staging_readings", "streaming_cdc_upsert",
-    "streaming_dedup_exact", "streaming_dedup_latest_wins", "streaming_ingest_kaggle",
-    "streaming_interval_join", "streaming_outer_interval_join", "streaming_session_windows",
-    "streaming_stateful_device_stats", "streaming_static_enrich", "streaming_tumbling_watermark",
-    "summary_by_device", "summary_by_load", "summary_by_location",
-    "summary_overall", "timetravel_upsert", "top_bigrams",
-    "tpch_q10_returned_items", "tpch_q14_promo_effect", "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority", "tpch_q5_regional_revenue", "tpch_q6_forecast_revenue",
-    "weighted_sample_topk", "zorder_events_box",
-}
-# Round-4 driver rows (CORRECTNESS_r04.json keys, frozen): every row
-# green. Union of r01-r04 covers 170 distinct queries; the 21 still
-# missing any driver row are fronted below.
-_DRIVER_VERIFIED_R04 = {
-    "bm25_topk", "bpe_encode_stats", "bpe_merge_table",
-    "cms_frequency_check", "corpus_filter_funnel", "corpus_shuffle_manifest",
-    "curriculum_score_phases", "datacard_rollup", "decontaminate_bloom_prefilter",
-    "dedup_cluster_report", "dedup_exact_substrings", "dedup_incremental_delta",
-    "drift_embedding_centroids", "dsir_importance_weights", "events_ohlc_hourly",
-    "events_variant_props", "graph_triangle_count", "histogram_quantile_sketch",
-    "hll_register_sketch", "hll_set_intersection", "join_cardinality_cms",
-    "keyword_tagging", "l_diversity_audit", "mad_outlier_gate",
-    "merge_error_intervals", "mmr_diverse_topk", "ndcg_retrieval_eval",
-    "pack_sequences_sharded", "pipeline_run_report", "quality_classifier_filter",
-    "quality_rank_fusion", "range_partition_audit", "record_linkage_blocked",
-    "reshard_stability_hrw", "salted_event_type_stats", "salted_hot_key_join",
-    "semantic_dedup_keep", "streaming_custom_source", "streaming_custom_source_dist",
-    "streaming_histq_partials", "streaming_incremental_dedup", "streaming_incremental_mart",
-    "streaming_mg_partials", "streaming_vocab_tvd", "time_weighted_avg",
-    "tokenizer_fertility", "unigram_surprisal_bits", "versioned_manifest_stats",
-    "versioned_table_diff", "vocab_divergence_tvd",
-}
-# Round-5 driver rows (CORRECTNESS_r05.json keys, frozen): every row
-# green. Union of r01-r05 covers ALL registry queries — the never-
-# verified backlog is empty from r6 on; ordering is pure freshness
-# rotation plus changed/new fronting.
-_DRIVER_VERIFIED_R05 = {
-    "catalog_maintenance_report", "cluster_aware_split", "compact_versioned_files",
-    "dedup_apply_substring_removal", "dedup_clusters_ngram", "dedup_clusters_star",
-    "dedup_embedding_cosine", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "dedup_simhash_pairs", "drift_value_chi2",
-    "dup_source_matrix", "embedding_coverage_check", "events_hourly_tumbling",
-    "events_json_props", "events_session_windows", "events_sliding_window",
-    "hard_negative_mining", "ingest_audit_log", "ingest_file_log",
-    "ingest_kaggle_transform", "jl_projection_recall", "k_anonymity_audit",
-    "knn_brute_force_cosine", "knn_ivfpq_adc", "knn_lsh_cosine",
-    "knn_pq_adc", "knn_pq_rerank", "minhash_lsh_quality",
-    "mixture_token_budget", "multimodal_audio_energy", "multimodal_phash_dedup",
-    "padding_waste_by_bucket", "pq_recall_check", "retention_filter",
-    "simhash_fingerprints", "skew_key_diagnostics", "streaming_cms_partials",
-    "streaming_hll_partials", "streaming_pq_encode", "synthetic_fields_contract",
-    "text_stats", "tfidf_topk", "topk_orders",
-    "tpch_q18_large_volume_customers", "union_ops_counts", "vocab_coverage_curve",
-    "window_temperature_deltas", "winsorize_event_values",
-}
-# Round-6 changed/new set: queries whose OPERATOR code path changed
-# this round and therefore need a fresh driver row. The r6 rework was
-# performance-focused: session-cached index artifacts (quantized
-# corpus, IVF cells, PQ codebook/codes, TF-IDF/BM25 postings — the
-# build-once/serve-many materializations), the minhash inline(array)
-# band generator, the anomaly single-select consolidation, and the
-# PIL/soundfile-upgradeable decode_media. Every consumer of those
-# paths is listed; plus the five new r6 queries (SQ8 ANN + recall,
-# containment dedup, n-gram novelty, token-budget pick).
-_CHANGED_R06 = [
-    # new this round (no driver row yet)
-    "knn_sq8_cosine",
-    "sq8_recall_check",
-    "dedup_containment_pairs",
-    "ngram_novelty_scores",
-    "token_budget_pick",
-    "cluster_balanced_sample",
-    "embedding_space_diagnostics",
-    "knn_ivfsq8_cosine",
-    "streaming_sq8_encode",
-    # ANN family (quantized_corpus / ivf_index / pq codebook+codes caches)
-    "knn_brute_force_cosine", "knn_ivf_cosine", "knn_lsh_cosine",
-    "knn_pq_adc", "knn_pq_rerank", "knn_ivfpq_adc",
-    "ann_recall_check", "pq_recall_check", "ndcg_retrieval_eval",
-    "jl_projection_recall", "hard_negative_mining", "mmr_diverse_topk",
-    "dedup_embedding_cosine", "semantic_dedup_keep", "streaming_pq_encode",
-    # minhash band generator rework
-    "dedup_minhash_lsh", "minhash_lsh_quality",
-    # inverted-index caches
-    "tfidf_topk", "bm25_topk",
-    # anomaly single-select consolidation (+ its mart/summary consumers)
-    "anomaly_scores", "anomaly_scores_t2", "mart_readings",
-    "summary_by_load", "summary_by_device", "summary_by_location",
-    "summary_overall", "anomaly_breakdown", "ops_anomaly_count_per_device",
-    "union_ops_counts", "pipeline_run_report",
-    # decode_media optional-dependency upgrade path
-    "multimodal_decode_headers",
-    # rank-fusion job-count rework (GROUPING SETS digest + LocalRelation
-    # broadcasts replace count + per-signal windowed-bin jobs)
-    "quality_rank_fusion",
-    # repeated-fingerprint filter reworked to one window-count exchange
-    "dedup_exact_substrings", "dedup_apply_substring_removal",
-]
-# Round-6 driver rows (CORRECTNESS_r06.json keys, frozen): every row
-# green — the r6 sample covered the 9 new queries plus every
-# changed-path consumer, exactly as ordered.
-_DRIVER_VERIFIED_R06 = {
-    "ann_recall_check", "anomaly_breakdown", "anomaly_scores",
-    "anomaly_scores_t2", "bm25_topk", "chunk_documents_cdc",
-    "cluster_balanced_sample", "dedup_apply_substring_removal", "dedup_containment_pairs",
-    "dedup_embedding_cosine", "dedup_exact_substrings", "dedup_minhash_lsh",
-    "doc_fingerprints_bottomk", "embedding_space_diagnostics", "hard_negative_mining",
-    "jl_projection_recall", "knn_brute_force_cosine", "knn_ivf_cosine",
-    "knn_ivfpq_adc", "knn_ivfsq8_cosine", "knn_lsh_cosine",
-    "knn_pq_adc", "knn_pq_rerank", "knn_sq8_cosine",
-    "lang_id_confusion", "mart_readings", "minhash_lsh_quality",
-    "mmr_diverse_topk", "multimodal_decode_headers", "multimodal_frame_sample",
-    "ndcg_retrieval_eval", "ngram_novelty_scores", "ops_anomaly_count_per_device",
-    "pii_redaction", "pipeline_run_report", "pq_recall_check",
-    "quality_rank_fusion", "semantic_dedup_keep", "sq8_recall_check",
-    "stratified_sample_check", "streaming_pq_encode", "streaming_sq8_encode",
-    "summary_by_device", "summary_by_load", "summary_by_location",
-    "summary_overall", "tfidf_topk", "token_budget_pick",
-    "training_corpus_prep", "union_ops_counts",
-}
-# Round-7 changed/new set: queries whose OPERATOR code path changed
-# this round and therefore need a fresh driver row. The r7 rework:
-# session-cached valid-readings table + stats digest with literal-CASE
-# micro-dim enrichment (the whole anomaly/mart/summary family),
-# session-cached exact ground-truth top-k (every recall/nDCG eval),
-# mad_outlier_gate's checkpointed cents table, the widened streaming
-# ingest landing, parameterized postings cache keys (tfidf/bm25), the
-# div()-pinned ppm share (embedding diagnostics), the decode_media
-# media-type wiring, and the sq8 empty-query guard. Plus the five new
-# r7 queries (entropy gate, trimmed mean, SQ8 rerank, IVF sweep,
-# banding design table).
-_CHANGED_R07 = [
-    # new this round (no driver row yet)
-    "char_entropy_quality",
-    "trimmed_mean_events",
-    "knn_sq8_rerank",
-    "ivf_recall_sweep",
-    "minhash_band_tuning",
-    "t_closeness_audit",
-    "zipf_fit_check",
-    "knn_ivfsq8_rerank",
-    "streaming_mad_partials",
-    # vr/stats-digest cache + literal-CASE enrichment consumers
-    "anomaly_scores", "anomaly_scores_t2", "mart_readings",
-    "summary_by_load", "summary_by_device", "summary_by_location",
-    "summary_overall", "anomaly_breakdown", "ops_anomaly_count_per_device",
-    "union_ops_counts", "pipeline_run_report",
-    # shared cached ground-truth top-k
-    "ann_recall_check", "pq_recall_check", "sq8_recall_check",
-    "ndcg_retrieval_eval", "jl_projection_recall",
-    # exchange-count / cache-key / parity reworks
-    "mad_outlier_gate", "streaming_ingest_kaggle",
-    "tfidf_topk", "bm25_topk", "embedding_space_diagnostics",
-    "multimodal_decode_headers", "knn_sq8_cosine",
-    # session-cached near-dup pair table consumers (cached_jaccard_pairs)
-    "dedup_clusters_ngram", "dedup_clusters_star", "dedup_cluster_report",
-    "pagerank_dedup_graph", "dup_source_matrix", "graph_triangle_count",
-    "cluster_aware_split", "minhash_lsh_quality", "training_corpus_prep",
-]
-# Round-7 driver rows (CORRECTNESS_r07.json keys, frozen): every row
-# green — the r7 sample covered the 9 new queries plus every
-# changed-path consumer, exactly as ordered.
-_DRIVER_VERIFIED_R07 = {
-    "ann_recall_check", "anomaly_breakdown", "anomaly_scores",
-    "anomaly_scores_t2", "bm25_topk", "char_entropy_quality",
-    "cluster_aware_split", "decontaminate_ngram_overlap", "dedup_chunk_overlap",
-    "dedup_cluster_report", "dedup_clusters_ngram", "dedup_clusters_star",
-    "domain_cap_sample", "domain_cap_threshold", "dup_source_matrix",
-    "embedding_space_diagnostics", "graph_triangle_count", "ivf_recall_sweep",
-    "jl_projection_recall", "knn_ivfsq8_rerank", "knn_sq8_cosine",
-    "knn_sq8_rerank", "lang_sampling_weights", "mad_outlier_gate",
-    "mart_readings", "minhash_band_tuning", "minhash_lsh_quality",
-    "multimodal_decode_headers", "ndcg_retrieval_eval", "ops_anomaly_count_per_device",
-    "pagerank_dedup_graph", "pipeline_run_report", "pq_recall_check",
-    "quality_repetition_rules", "sq8_recall_check", "streaming_ingest_kaggle",
-    "streaming_mad_partials", "summary_by_device", "summary_by_load",
-    "summary_by_location", "summary_overall", "t_closeness_audit",
-    "tfidf_topk", "tpch_q13_customer_distribution", "tpch_q17_small_quantity_revenue",
-    "tpch_q4_order_priority", "training_corpus_prep", "trimmed_mean_events",
-    "union_ops_counts", "zipf_fit_check",
-}
-# Round-8 changed/new set: queries whose OPERATOR code path changed
-# this round and therefore need a fresh driver row. The r8 rework:
-# the shared session-cached cents-CDF table statistic (mad + trimmed
-# mean serve paths, streamed MAD partials' shared helper), the
-# session-cached knn_sq8 serve output (sq8 search + recall), the
-# stats-digest driver-side treatment of the bounded-digest queries
-# (t-closeness, Zipf fit, embedding diagnostics), the square-and-
-# multiply exponent fix (banding design table), the audio-subtype
-# bit-depth parse (decode headers), the empty-digest/empty-query
-# guards (anomaly family, brute-force/HNM/ADC matmul kernels), and the
-# pack_sharded_from_counts factoring. Plus the new r8 flagship.
-_CHANGED_R08 = [
-    # new this round (no driver row yet)
-    "corpus_pipeline_full",
-    "colbert_maxsim_topk", "maxsim_pooled_rerank", "matryoshka_recall_sweep",
-    "knn_label_filtered",
-    "corpus_dedup_curve", "pmi_collocations", "quality_quantile_normalize",
-    "maxsim_pooled_recall", "streaming_novelty_curve",
-    "dedup_prefix_filter_join", "hybrid_rrf_retrieval",
-    # shared cents-CDF serve paths
-    "mad_outlier_gate", "trimmed_mean_events", "streaming_mad_partials",
-    # sq8 serve-output cache
-    "knn_sq8_cosine", "sq8_recall_check",
-    # stats-digest driver-side reworks
-    "t_closeness_audit", "zipf_fit_check", "embedding_space_diagnostics",
-    # ADVICE r7 fixes on live paths
-    "minhash_band_tuning", "multimodal_decode_headers",
-    "anomaly_scores", "anomaly_scores_t2",
-    "knn_brute_force_cosine", "hard_negative_mining",
-    "knn_pq_adc", "knn_pq_rerank", "knn_ivfpq_adc",
-    # pack factoring
-    "pack_sequences_sharded",
-]
-_DRIVER_VERIFIED_R08 = {
-    "anomaly_scores", "anomaly_scores_t2", "colbert_maxsim_topk",
-    "corpus_dedup_curve", "corpus_pipeline_full", "custom_source_device_stats",
-    "dedup_prefix_filter_join", "embedding_space_diagnostics", "event_value_percentiles",
-    "hard_negative_mining", "hybrid_rrf_retrieval", "jsonl_roundtrip",
-    "knn_brute_force_cosine", "knn_ivfpq_adc", "knn_label_filtered",
-    "knn_pq_adc", "knn_pq_rerank", "knn_sq8_cosine",
-    "mad_outlier_gate", "matryoshka_recall_sweep", "maxsim_pooled_recall",
-    "maxsim_pooled_rerank", "minhash_band_tuning", "multimodal_decode_headers",
-    "orc_roundtrip", "pack_sequences_sharded", "pmi_collocations",
-    "quality_quantile_normalize", "schema_evolution_read", "sq8_recall_check",
-    "sql_api_regional_revenue", "streaming_mad_partials", "streaming_novelty_curve",
-    "t_closeness_audit", "tpch_q11_important_stock", "tpch_q12_priority_by_returnflag",
-    "tpch_q15_top_supplier", "tpch_q16_supplier_counts", "tpch_q19_disjunctive_revenue",
-    "tpch_q20_part_promotion", "tpch_q21_suppliers_who_kept_waiting", "tpch_q22_global_sales_opportunity",
-    "tpch_q2_min_cost_supplier", "tpch_q7_volume_shipping", "tpch_q8_market_share",
-    "tpch_q9_product_type_profit", "trimmed_mean_events", "upsert_merge",
-    "value_trend_by_type", "zipf_fit_check",
-}
-# Round-9 changed/new set: queries whose OPERATOR code path changed
-# this round and therefore need a fresh driver row. The r9 rework
-# (VERDICT r8 asks + ADVICE r8): the single-projection signal-bins
-# table + literal-map rank lookup behind quality_rank_fusion, the
-# session-cached tokenized corpus + repeated-span table behind the
-# exact-substring family, the window-based Q21 decorrelation, the PMI
-# oracle tokenizer alignment, and the maxsim strategy validation /
-# IVF zero-norm-centroid guard (live on every maxsim/IVF-assignment
-# consumer). Plus the new build-path query dedup_repeated_spans.
-_CHANGED_R09 = [
-    # new this round (no driver row yet)
-    "dedup_repeated_spans",
-    "doc_fingerprints_winnowing", "dedup_winnowing_overlap",
-    "mixture_temperature_weights", "vocab_growth_curve",
-    "span_corruption_plan", "fim_transform_plan",
-    "stratified_allocation_hamilton",
-    "epoch_shuffle_footrule", "seq_len_tradeoff_curve",
-    "winnowing_detector_quality",
-    # exhaustive-MaxSim ground truth now session-cached
-    "maxsim_pooled_recall",
-    # reworked serve/build paths
-    "quality_rank_fusion",
-    "dedup_exact_substrings", "dedup_apply_substring_removal",
-    "tpch_q21_suppliers_who_kept_waiting",
-    # oracle-tokenizer alignment (ADVICE r8 #1)
-    "pmi_collocations",
-    # CMS count-first build + word-slice hash family (sketch VALUES
-    # changed — fresh driver rows required)
-    "cms_frequency_check", "join_cardinality_cms", "streaming_cms_partials",
-    # SemDeDup serves off the session-cached dup-corpus cell index
-    "semantic_dedup_keep",
-    # NOT fronted: the maxsim strategy-validation and IVF
-    # zero-norm-centroid guards (ADVICE r8 #2/#3) touch only error
-    # paths — outputs are bit-identical (pytest-pinned), so their nine
-    # consumer queries stay in the freshness rotation instead of
-    # crowding out genuinely stale rows. With 236 queries and a
-    # ~50-row driver sample, the freshness cycle is
-    # ⌈236 / (50 − new − changed)⌉ rounds; keeping changed ≤ ~10 holds
-    # it near five.
-]
-# Round-9 driver rows (CORRECTNESS_r09.json keys, frozen): every row
-# green — the r9 sample covered the 11 new queries plus the
-# changed-path consumers and a freshness slice.
-_DRIVER_VERIFIED_R09 = {
-    "analyze_table_stats", "approx_percentile_check", "cms_frequency_check",
-    "continuous_daily_rollup", "customer_order_windows", "dedup_apply_substring_removal",
-    "dedup_exact_substrings", "dedup_repeated_spans", "dedup_valid_readings",
-    "dedup_valid_readings_aggform", "dedup_winnowing_overlap", "doc_fingerprints_winnowing",
-    "dq_check_violations", "epoch_shuffle_footrule", "events_moving_avg_7d",
-    "events_resample_hourly_ffill", "fim_transform_plan", "funnel_ordered_stages",
-    "join_cardinality_cms", "kmeans_embedding_clusters", "maxsim_pooled_recall",
-    "mg_heavy_hitters_check", "mixture_temperature_weights", "multimodal_media_metadata",
-    "multimodal_resize_images", "nation_priority_unpivot", "pack_sequences_grid",
-    "part_setops", "pmi_collocations", "quality_rank_fusion",
-    "revenue_cube", "revenue_rollup", "scd2_user_history",
-    "semantic_dedup_keep", "seq_len_tradeoff_curve", "span_corruption_plan",
-    "staging_readings", "stratified_allocation_hamilton", "streaming_cms_partials",
-    "top_bigrams", "tpch_q10_returned_items", "tpch_q14_promo_effect",
-    "tpch_q1_pricing_summary", "tpch_q21_suppliers_who_kept_waiting", "tpch_q3_shipping_priority",
-    "tpch_q5_regional_revenue", "tpch_q6_forecast_revenue", "vocab_growth_curve",
-    "winnowing_detector_quality", "zorder_events_box",
-}
-# Round-10 changed/new set: queries whose OPERATOR code path changed
-# this round and therefore need a fresh driver row. The r10 rework
-# (VERDICT r9 asks + ADVICE r9): the zero-exchange array-native
-# winnowing fingerprint build, the winnowing pair-index build/serve
-# split (report + detector quality now serve from the cached pair
-# table), the SemDeDup per-cell Arrow-GEMM pairing kernel, the span
-# build's 60-bit long fingerprints (representation swap — span values
-# pinned identical, but kernel swaps get driver witness per VERDICT
-# r9 #5), the exact-⌊n²/2⌋ footrule normalization (VALUES change for
-# odd-n shards), and the boost_permille denominator guard. Plus
-# matryoshka_recall_sweep — its r9 fused-kernel rework was trimmed
-# from _CHANGED_R09 (VERDICT r9 #5 asks it fronted). Plus the round's
-# nine new queries. 21 entries total, so a ~50-row driver sample
-# leaves ~29 slots for the 54 r4-and-older stale rows (VERDICT r9 #4)
-# stalest-first — the burn-down completes next round; coverage growth
-# was weighted over staleness this round.
-_CHANGED_R10 = [
-    # new this round (no driver row yet)
-    "dedup_winnowing_pair_index",
-    "dedup_incremental_winnowing",
-    "quality_bigram_surprisal",
-    "dataloader_contamination_audit",
-    "mixture_unimax_allocation",
-    "bm25_impact_topk", "bm25_impact_recall",
-    "streaming_winnowing_novelty",
-    "streaming_bigram_lm_partials",
-    # kernel/serve-path swaps needing fresh driver witness
-    "doc_fingerprints_winnowing", "dedup_winnowing_overlap",
-    "winnowing_detector_quality",
-    "semantic_dedup_keep",
-    "dedup_repeated_spans", "dedup_exact_substrings",
-    "dedup_apply_substring_removal",
-    "matryoshka_recall_sweep",
-    # result-changing review fixes (ADVICE r9)
-    "epoch_shuffle_footrule", "mixture_temperature_weights",
-    # avgdl now cached with the BM25 index (serve-path change — the
-    # maxsim_pooled_recall r9 precedent: cached artifacts get a fresh
-    # driver row)
-    "bm25_topk", "hybrid_rrf_retrieval",
-]
-# Round-10 driver rows (CORRECTNESS_r10.json keys, frozen): every row
-# green — the 21 _CHANGED_R10 new/changed queries plus 29 staleness
-# burn-down slots.
-_DRIVER_VERIFIED_R10 = {
-    'approx_distinct_users', 'bm25_impact_recall', 'bm25_impact_topk',
-    'bm25_topk', 'bpe_encode_stats', 'bpe_merge_table',
-    'clicks_in_error_windows', 'corpus_filter_funnel', 'corpus_shuffle_manifest',
-    'curriculum_score_phases', 'datacard_rollup', 'dataloader_contamination_audit',
-    'decontaminate_bloom_prefilter', 'dedup_apply_substring_removal', 'dedup_exact_substrings',
-    'dedup_incremental_delta', 'dedup_incremental_winnowing', 'dedup_repeated_spans',
-    'dedup_winnowing_overlap', 'dedup_winnowing_pair_index', 'doc_fingerprints_winnowing',
-    'dsir_importance_weights', 'epoch_shuffle_footrule', 'events_asof_last_click',
-    'events_variant_props', 'histogram_quantile_sketch', 'hll_register_sketch',
-    'hybrid_rrf_retrieval', 'jdbc_roundtrip', 'keyword_tagging',
-    'l_diversity_audit', 'matryoshka_recall_sweep', 'mixture_temperature_weights',
-    'mixture_unimax_allocation', 'nation_priority_pivot', 'profile_events_columns',
-    'quality_bigram_surprisal', 'quality_classifier_filter', 'range_partition_audit',
-    'record_linkage_blocked', 'reshard_stability_hrw', 'semantic_dedup_keep',
-    'streaming_bigram_lm_partials', 'streaming_winnowing_novelty', 'timetravel_upsert',
-    'tokenizer_fertility', 'unigram_surprisal_bits', 'vocab_divergence_tvd',
-    'weighted_sample_topk', 'winnowing_detector_quality',
-}
-# Round-11 driver sample (CORRECTNESS_r11.json keys, frozen).
-_DRIVER_VERIFIED_R11 = {
-    'bm25_hard_negatives', 'bm25_topk', 'catalog_maintenance_report',
-    'corpus_refresh_report', 'dedup_exact', 'dedup_ngram_jaccard',
-    'dedup_winnowing_overlap', 'drift_embedding_centroids', 'events_hourly_tumbling',
-    'events_json_props', 'events_ohlc_hourly', 'events_session_windows',
-    'events_sliding_window', 'hll_set_intersection', 'ingest_audit_log',
-    'ingest_file_log', 'ingest_kaggle_transform', 'ivfpq_residual_recall',
-    'knn_ivfpq_residual', 'knn_ivfpq_residual_rerank', 'merge_error_intervals',
-    'quality_trigram_surprisal', 'retention_filter', 'salted_event_type_stats',
-    'salted_hot_key_join', 'streaming_cdc_upsert', 'streaming_corpus_refresh',
-    'streaming_custom_source', 'streaming_custom_source_dist', 'streaming_dedup_exact',
-    'streaming_dedup_latest_wins', 'streaming_histq_partials', 'streaming_incremental_dedup',
-    'streaming_incremental_mart', 'streaming_interval_join', 'streaming_mg_partials',
-    'streaming_outer_interval_join', 'streaming_session_windows', 'streaming_stateful_device_stats',
-    'streaming_static_enrich', 'streaming_trigram_lm_partials', 'streaming_tumbling_watermark',
-    'streaming_vocab_tvd', 'synthetic_fields_contract', 'time_weighted_avg',
-    'topk_orders', 'tpch_q18_large_volume_customers', 'versioned_manifest_stats',
-    'versioned_table_diff', 'window_temperature_deltas',
-}
-# Round-12 changed/new set (optimization round 2: VERDICT r11 items
-# #1-#6, #9): every query whose plan was restructured this round needs
-# a fresh driver witness; the new build row has no row anywhere.
-_CHANGED_R12 = [
-    # new this round (VERDICT r11 #6): the from-scratch IVF-SQ8
-    # inverted-list build row
-    "ivfsq8_index_build",
-    # plan-restructured this round:
-    # - one-digest-pass band tuning (#2)
-    # - single-train-pass decontamination (+ its corpus_pipeline_full
-    #   embedding, which also gained the survivor barrier) (#1)
-    # - token_budget_pick pushed-filter fix (#9)
-    # - the fused MaxSim reduction (all three consumers) (#3)
-    # - prefix-filter pair persist (#2)
-    "minhash_band_tuning",
-    "decontaminate_ngram_overlap",
-    "corpus_pipeline_full",
-    "token_budget_pick",
-    "colbert_maxsim_topk",
-    "maxsim_pooled_rerank",
-    "maxsim_pooled_recall",
-    "dedup_prefix_filter_join",
-    # - gate-report single-pass fp counts + admission barrier; the
-    #   streamed twin shares the gate kernel
-    "corpus_refresh_report",
-    "streaming_corpus_refresh",
-    # - single-explode cells form for the Heaps'-law curve
-    "vocab_growth_curve",
-]
-# Round-11 changed/new set (VERDICT r10 asks #2-#4 + ADVICE r10).
-# Kept deliberately SMALL: r11 is the staleness burn-down round —
-# VERDICT r10 #1 requires every one of the 25 queries whose newest
-# driver row is r3/r4 to get a fresh row, so changed+new must leave
-# ≥25 sample slots for them.
-_CHANGED_R11 = [
-    # new this round (no driver row yet): the delta-crawl composite
-    # (VERDICT r10 #4) in batch and streamed form, the add-one-smoothed
-    # trigram LM gate (VERDICT r10 #5), and the residual IVF-PQ serve
-    # (VERDICT r10 #6)
-    "corpus_refresh_report",
-    "streaming_corpus_refresh",
-    "quality_trigram_surprisal",
-    "knn_ivfpq_residual",
-    "ivfpq_residual_recall",
-    "knn_ivfpq_residual_rerank",
-    "streaming_trigram_lm_partials",
-    "bm25_hard_negatives",
-    # serve-path changes needing fresh driver witness:
-    # - winnowing_overlap_pairs broadcast → cost-based hint (ADVICE r10)
-    # - bm25_topk registry row now cost-routes between the exact and
-    #   impact-pruned serves (VERDICT r10 #2)
-    # (NOT fronted: dedup_winnowing_pair_index — the VERDICT r10 #3
-    # count-first prune was measured 13.8× at 100× vs the single-pass
-    # form's 9.9× and REJECTED, so the build code is byte-identical to
-    # its r10-verified state; the irreducibility note lives in the
-    # operator docstring + SCALE.md r11)
-    "dedup_winnowing_overlap",
-    "bm25_topk",
-]
-_ROUND_SETS = [
-    _DRIVER_VERIFIED_R0102,
-    _DRIVER_VERIFIED_R03,
-    _DRIVER_VERIFIED_R04,
-    _DRIVER_VERIFIED_R05,
-    _DRIVER_VERIFIED_R06,
-    _DRIVER_VERIFIED_R07,
-    _DRIVER_VERIFIED_R08,
-    _DRIVER_VERIFIED_R09,
-    _DRIVER_VERIFIED_R10,
-    _DRIVER_VERIFIED_R11,
-]
-_last_round: dict[str, int] = {}
-for _i, _s in enumerate(_ROUND_SETS):
-    for _n in _s:
-        _last_round[_n] = _i
-_changed = [n for n in _CHANGED_R12 if n in REGISTRY]
-_new_this_round = [n for n in _changed if n not in _last_round]
-_changed_with_row = [n for n in _changed if n in _last_round]
-# Ordering priority (driver samples ~50 entries per round, dict order):
-# 1. queries added this round (no row anywhere),
-# 2. changed-this-round queries (hold a green row; need a fresh one),
-# 3. everything else, stalest driver row first (r1/r2 → … → r10).
-# Within each block batch queries precede micro-batch streaming ones
-# (fixed ~2 s harness cost each) so a time-boxed run verifies the most
-# queries per second. CRITICAL ordering fix (VERDICT r10 #1): through
-# r10 the batch-first tiebreak was applied to the WHOLE rest block, so
-# an r3-stale streaming row sorted BEHIND every batch row including
-# r9-fresh ones — exactly why the streaming family's driver rows
-# stayed stale for seven rounds. Staleness now dominates: the
-# batch-first preference applies only WITHIN a staleness level.
-
-
-def _batch_first(names):
-    return [n for n in names if not n.startswith("streaming_")] + [
-        n for n in names if n.startswith("streaming_")
-    ]
-
-
-_rest_by_staleness = sorted(
-    (n for n in REGISTRY if n not in _changed),
-    key=lambda n: (_last_round.get(n, -1), n.startswith("streaming_")),
-)
-_order = (
-    _batch_first(_new_this_round)
-    + _batch_first(_changed_with_row)
-    + _rest_by_staleness
-)
-REGISTRY = {n: REGISTRY[n] for n in _order}

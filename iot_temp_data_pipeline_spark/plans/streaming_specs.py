@@ -1948,7 +1948,7 @@ STREAMING["streaming_bigram_lm_partials"] = QuerySpec(
 
 def _streaming_corpus_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-refresh composition AS A STREAM (VERDICT r10 #4 —
-    the streamed twin of plans/extensions_r11's corpus_refresh_report):
+    the streamed twin of plans/corpus_specs' corpus_refresh_report):
     the crawl increment (doc_id % 3 == 0 of the dup-injected corpus)
     arrives through a parquet landing zone in micro-batches; each
     micro-batch runs the SAME admission kernel
@@ -2025,7 +2025,7 @@ def _streaming_corpus_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         gate = spark.read.schema(sink_schema).parquet(sink).drop("batch_id")
     else:
         gate = spark.createDataFrame([], sink_schema).drop("batch_id")
-    from .extensions_r11 import REFRESH_SPEC
+    from .corpus_specs import REFRESH_SPEC
 
     return shape(
         rfo.attach_cobatch_flag(spark, sf_dir, gate, count_hint=hint),
@@ -2034,9 +2034,9 @@ def _streaming_corpus_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _streaming_corpus_refresh_oracle() -> str:
-    from .extensions_r11 import EXTENSIONS_R11
+    from .corpus_specs import CORPUS
 
-    return EXTENSIONS_R11["corpus_refresh_report"].oracle
+    return CORPUS["corpus_refresh_report"].oracle
 
 
 STREAMING["streaming_corpus_refresh"] = QuerySpec(

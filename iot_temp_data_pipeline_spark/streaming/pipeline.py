@@ -83,9 +83,16 @@ def incremental_mart_refresh(
     mart from all accumulated raw). Here each micro-batch (≈ one dlt
     load) MERGEs only ITS rows into the versioned mart table
     (sources/versioned.py copy-on-write upsert): per-run work is
-    bounded by the batch, not the table; every load leaves a committed
-    version (time travel over mart history); and the file-source
-    checkpoint guarantees a load is merged exactly once.
+    bounded by the batch, not the table; and every load leaves a
+    committed version (time travel over mart history).
+
+    Delivery is at-least-once, not exactly-once: ``foreachBatch``
+    replays a batch whose ``upsert`` committed before the checkpoint's
+    commit log recorded it (a crash between the two), and the
+    replay commits one more version with the same content. The merged
+    rows stay right (a replayed batch replaces its own keys), but
+    versions then stop mapping one-to-one to loads. Making ``upsert``
+    idempotent per (query id, batch id) is ROADMAP direction 4.
 
     Incremental-safety contract: the mart columns derived here are
     PER-ROW (category buckets, day layout key) and the only cross-load

@@ -134,7 +134,7 @@ def test_ivfsq8_index_build_matches_cached_artifact(spark, sf_dir):
     artifact's inverted-list content exactly (vec_id -> cell, scale,
     norm, codes) — the build path and the serve artifact may never
     diverge."""
-    from iot_temp_data_pipeline_spark.plans.extensions_r12 import (
+    from iot_temp_data_pipeline_spark.plans.retrieval_specs import (
         _ivfsq8_index_build,
     )
 

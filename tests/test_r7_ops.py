@@ -10,7 +10,7 @@ from iot_temp_data_pipeline_spark.operators import sq8
 from iot_temp_data_pipeline_spark.operators.profiling import trimmed_mean_events
 from iot_temp_data_pipeline_spark.operators.similarity import ground_truth_topk
 from iot_temp_data_pipeline_spark.operators.text_analysis import char_entropy
-from iot_temp_data_pipeline_spark.plans.extensions_r7 import _ivf_recall_sweep
+from iot_temp_data_pipeline_spark.plans.retrieval_specs import _ivf_recall_sweep
 
 
 def test_trimmed_mean_matches_naive_sorted(spark):

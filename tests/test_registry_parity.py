@@ -3,6 +3,9 @@ mirror of the driver's t2 correctness gate."""
 
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
 
 from iot_temp_data_pipeline_spark.plans.registry import REGISTRY
@@ -31,3 +34,23 @@ def test_rows_only_query_runs(spark, sf_dir, name):
     df = REGISTRY[name].spark(spark, sf_dir)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+def test_no_round_numbered_scaffolding():
+    """Registry modules are named by domain and `REGISTRY` keeps its
+    insertion order: no module named after a release round, no
+    round-by-round reordering of the registry, and one benchmark
+    harness (`perfbench/`)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    package = os.path.join(root, "iot_temp_data_pipeline_spark")
+    round_named = [
+        os.path.relpath(os.path.join(d, name), root)
+        for d, _dirs, files in os.walk(package)
+        for name in files
+        if name.endswith(".py") and re.search(r"_r\d+", name)
+    ]
+    assert round_named == []
+    with open(os.path.join(package, "plans", "registry.py"), encoding="utf-8") as fh:
+        registry_src = fh.read()
+    assert not re.search(r"_DRIVER_VERIFIED|_CHANGED_R|_ROUND_SETS", registry_src)
+    assert not os.path.exists(os.path.join(root, "bench.py"))
