@@ -10,6 +10,10 @@
   per-column NDV/min/max). AQE re-plans at runtime anyway, so this is
   the batch-planning complement, exactly like Postgres's ANALYZE fed its
   cost model.
+- Layout: hash bucketing and Z-order clustering here. Small-files
+  compaction is ``sources/versioned.compact``, which commits the packed
+  files as a new table version, so readers never see a half-swapped
+  directory.
 """
 
 from __future__ import annotations
@@ -105,41 +109,6 @@ def analyzed_column_stats(
         schema="col_name string, table_rows long, num_nulls long, "
         "min_value string, max_value string",
     )
-
-
-def compact_small_files(
-    spark: SparkSession,
-    table_dir: str,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> tuple[int, int]:
-    """Small-files compaction: rewrite a parquet directory into
-    ceil(total_bytes / target_bytes) files. The file-count pathology is
-    the streaming/CDC sink's long-term failure mode (every micro-batch
-    appends small files; listing + per-file open costs grow linearly);
-    periodic compaction restores scan efficiency. Returns (files_before,
-    files_after).
-
-    At 100 TB this runs per partition directory (bounded work, like the
-    upsert); here the whole dir is one unit. `coalesce` avoids a
-    shuffle when reducing file count — the rewrite is scan + write."""
-    import glob
-    import math
-    import os
-
-    files = glob.glob(f"{table_dir}/*.parquet")
-    total = sum(os.path.getsize(f) for f in files)
-    n_target = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(table_dir)
-    tmp = table_dir.rstrip("/") + "__compact_tmp"
-    df.coalesce(n_target).write.parquet(tmp)
-    # atomic-ish swap (same filesystem): old dir replaced by compacted
-    bak = table_dir.rstrip("/") + "__compact_old"
-    os.rename(table_dir, bak)
-    os.rename(tmp, table_dir)
-    import shutil
-
-    shutil.rmtree(bak)
-    return len(files), len(glob.glob(f"{table_dir}/*.parquet"))
 
 
 def zorder_key(cols: list, bits: int = 8):

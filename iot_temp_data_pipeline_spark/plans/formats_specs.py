@@ -1,6 +1,7 @@
-"""Oracle-checked registry queries for the extra source/sink formats
-(sources/formats.py): JSON-lines roundtrip, partitioned-ORC roundtrip
-with partition pruning, and the partition-pruned latest-wins upsert.
+"""Oracle-checked registry queries for the extra source/sink formats:
+JSON-lines roundtrip (sources/formats.py), partitioned-ORC roundtrip
+with partition pruning, and the versioned table's latest-wins upsert
+(sources/versioned.py).
 
 Each query materializes real files in a scratch dir, drives the format
 through Spark, and reduces to an aggregate whose DuckDB oracle is
@@ -20,13 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.catalog import get_or_build, load_table
-from ..sources.formats import (
-    merge_upsert_partitioned,
-    read_jsonl,
-    read_orc,
-    write_jsonl,
-    write_orc_partitioned,
-)
+from ..sources.formats import read_jsonl
 from ..streaming.core import workdir
 from .registry import QuerySpec, shape, sql_select
 
@@ -64,7 +59,7 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("value_centi"),
     )
     work = workdir("jsonl")
-    write_jsonl(out, f"{work}/events_jsonl")
+    out.repartition(4).write.mode("overwrite").json(f"{work}/events_jsonl")
     back = read_jsonl(spark, f"{work}/events_jsonl", _JSONL_SCHEMA)
     df = (
         back.groupBy("event_type")
@@ -115,8 +110,8 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("ts", "yyyy-MM-dd").alias("event_date"),
     )
     work = workdir("orc")
-    write_orc_partitioned(out, f"{work}/events_orc", "event_date")
-    back = read_orc(spark, f"{work}/events_orc").filter(
+    out.write.mode("overwrite").partitionBy("event_date").orc(f"{work}/events_orc")
+    back = spark.read.orc(f"{work}/events_orc").filter(
         F.col("event_date").between(*ORC_WINDOW)
     )
     df = (
@@ -140,7 +135,7 @@ ORC_SQL = sql_select(
 )
 
 
-# ------------------------------------------------------ partitioned upsert
+# -------------------------------------------------------- versioned upsert
 
 UPSERT_WINDOW = ("2024-01-05", "2024-01-09")
 UPSERT_BUMP = 1000
@@ -154,13 +149,13 @@ UPSERT_SPEC = [
 
 
 def upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-pruned latest-wins MERGE: the base table (events
-    partitioned by day) takes an update set confined to a 5-day window
-    — every event_id % 7 row gets its value bumped, and event_id % 97
-    rows re-insert under a shifted key. Only the 5 touched daily
-    partitions are rewritten (sources/formats.py invariant: a key's
-    partition never changes). The aggregate over the merged table is
-    checked against an oracle that states MERGE semantics as
+    """Latest-wins MERGE into a versioned table: the base table (events
+    range-clustered by day) takes an update set confined to a 5-day
+    window — every event_id % 7 row gets its value bumped, and
+    event_id % 97 rows re-insert under a shifted key. Only the files
+    holding those 5 days are rewritten (sources/versioned.py invariant:
+    a key's layout value never changes). The aggregate over the merged
+    table is checked against an oracle that states MERGE semantics as
     base-minus-updated-keys UNION ALL updates."""
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
@@ -172,20 +167,16 @@ def upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The pre-existing base table is test FIXTURE, not the operator
     # under test (a real MERGE runs against a table that already
     # exists). Build it once per version of sf_dir and give each
-    # invocation a fresh copy (tmpfs copytree, milliseconds), so
-    # repeated runs measure the merge, not re-creating the table.
+    # invocation a fresh copy (tmpfs copytree, milliseconds; manifest
+    # paths are relative), so repeated runs measure the merge, not
+    # re-creating the table.
     import shutil
+
+    from ..sources.versioned import create_table, read_version, upsert
 
     def build():
         template = f"{workdir('upsert_base')}/events_table"
-        # Co-locate each date's rows before the partitioned write:
-        # without this every shuffle partition emits a file into every
-        # date dir (32 tasks × 30 dates ≈ 1000 tiny files); with it the
-        # table is one file per partition — the layout a 100 TB table
-        # needs anyway.
-        base.repartition(F.col("event_date")).write.partitionBy(
-            "event_date"
-        ).parquet(template)
+        create_table(spark, base, template, layout_col="event_date")
         return template
 
     template = get_or_build(spark, "upsert_base", sf_dir, build)
@@ -201,10 +192,8 @@ def upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", F.col("event_id") + INSERT_KEY_SHIFT
     )
     updates = updated.unionByName(inserted)
-    merge_upsert_partitioned(
-        spark, table_dir, updates, key_cols=["event_id"], partition_col="event_date"
-    )
-    merged = spark.read.parquet(table_dir)
+    upsert(spark, table_dir, updates, key_cols=["event_id"], layout_col="event_date")
+    merged = read_version(spark, table_dir)
     df = (
         merged.groupBy("event_type")
         .agg(F.count("*").alias("n"), F.sum("value_centi").alias("sum_centi"))

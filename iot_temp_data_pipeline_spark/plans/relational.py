@@ -1395,24 +1395,26 @@ MAINT_SPEC = [
 def catalog_maintenance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`table_exists` / `ensure_table` guard semantics (the reference's
     `dbt_transform/macros/table_exists.sql:1-15` macro and its
-    incremental-guard use) plus `compact_small_files`, pinned end to end:
+    incremental-guard use) plus versioned-table compaction, pinned end to
+    end:
 
     - catalog probe is False before / True after materialization;
     - a second `ensure_table` with a DIFFERENT build is a no-op (the
       guard must reuse the existing table — row count stays at build1's);
     - `overwrite=True` forces the rebuild (row count moves to build2's);
-    - a 16-file parquet directory compacts to 1 file with row count and
-      an order-independent checksum (sum of keys) preserved.
+    - a 16-file versioned table compacts (`versioned.compact`) to 1
+      file with row count and an order-independent checksum (sum of
+      keys) equal between the two versions.
 
     The oracle recomputes both build counts from `orders` and pins the
     file counts and invariants as literals — any drift in the guard
     (rebuilding when it must reuse, or vice versa) or a row lost in the
-    compaction swap mismatches."""
+    compaction mismatches."""
     import shutil
     import tempfile
 
-    from ..maintenance import compact_small_files
     from ..sources.catalog import ensure_table, table_exists
+    from ..sources.versioned import compact, create_table, file_count, read_version
 
     orders = load_table(spark, sf_dir, "orders")
     tbl = f"maint_probe_{os.getpid()}"
@@ -1429,16 +1431,23 @@ def catalog_maintenance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     scratch = tempfile.mkdtemp(prefix="sg_compact_")
     try:
-        table_dir = os.path.join(scratch, "t")
+        table = os.path.join(scratch, "t")
         li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
-        li.repartition(16).write.parquet(table_dir)
-        before = spark.read.parquet(table_dir).agg(
-            F.count("*").alias("n"), F.sum("l_orderkey").alias("s")
-        ).first()
-        files_before, files_after = compact_small_files(spark, table_dir)
-        after = spark.read.parquet(table_dir).agg(
-            F.count("*").alias("n"), F.sum("l_orderkey").alias("s")
-        ).first()
+        create_table(spark, li, table, layout_col="l_orderkey", n_files=16)
+
+        def checksum(v: int):
+            return read_version(spark, table, version=v).agg(
+                F.count("*").alias("n"), F.sum("l_orderkey").alias("s")
+            ).first()
+
+        before = checksum(1)
+        # every file is below small_rows, so all of them pack into one
+        v2, _, _ = compact(
+            spark, table, layout_col="l_orderkey",
+            small_rows=before["n"] + 1, n_files=1,
+        )
+        after = checksum(v2)
+        files_before, files_after = file_count(table, 1), file_count(table, v2)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

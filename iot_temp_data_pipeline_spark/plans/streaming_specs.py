@@ -432,20 +432,18 @@ CDC_SPEC = [
 
 def _streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MERGE sink: each micro-batch reduces to its newest row
-    per (device_id, ts_micros) and foreachBatch-merges into a parquet
-    table partitioned by a device hash bucket, with version precedence
-    on dlt_id — so replayed or out-of-order batches can never clobber a
-    newer row (merge_upsert_partitioned's version_col path). This is
-    the standard CDC landing pattern: bounded per-batch work (only
-    touched partitions rewrite), exactly-once end state regardless of
+    per (device_id, ts_micros) and foreachBatch-merges into a versioned
+    table clustered on a device hash bucket, with version precedence on
+    dlt_id — so replayed or out-of-order batches can never clobber a
+    newer row (``versioned.upsert``'s ``version_col``). This is the
+    standard CDC landing pattern: bounded per-batch work (only files
+    holding a touched bucket rewrite), the same end state regardless of
     batch boundaries.
 
     End state == arg_max over the whole input per key, which is the
     oracle (same latest-wins contract as W1, lexicographic on dlt_id on
     both engines)."""
-    import os
-
-    from ..sources.formats import merge_upsert_partitioned
+    from ..sources.versioned import create_table, read_version, upsert, versions
 
     work = workdir("cdc")
     materialize_landing(_dedup_input(spark, sf_dir), f"{work}/landing")
@@ -455,7 +453,7 @@ def _streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .csv(f"{work}/landing")
     )
-    table_dir = f"{work}/table"
+    table = f"{work}/table"
     w = Window.partitionBy("device_id", "ts_micros").orderBy(F.desc("dlt_id"))
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -465,15 +463,15 @@ def _streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        if not os.path.isdir(table_dir):
-            reduced.write.partitionBy("bucket").parquet(table_dir)
+        if not versions(table):
+            create_table(spark, reduced, table, layout_col="bucket")
         else:
-            merge_upsert_partitioned(
+            upsert(
                 spark,
-                table_dir,
+                table,
                 reduced,
                 key_cols=["device_id", "ts_micros"],
-                partition_col="bucket",
+                layout_col="bucket",
                 version_col="dlt_id",
             )
 
@@ -484,7 +482,7 @@ def _streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return shape(spark.read.parquet(table_dir), CDC_SPEC)
+    return shape(read_version(spark, table), CDC_SPEC)
 
 
 CDC_ORACLE = (

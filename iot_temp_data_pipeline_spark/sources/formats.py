@@ -1,30 +1,14 @@
-"""Additional source/sink formats beyond parquet+CSV (SURVEY.md §2.1
-S7-S9 generalized): schema-explicit JSON-lines ingestion with corrupt-
-record capture, ORC materialization with partition pruning, and a
-partition-pruned latest-wins upsert (the lakehouse MERGE the
-reference's append-only Postgres sink never needed —
-`dlt_ingest/iot_temperature_pipeline.py:262-267` appends blindly and
-relies on the W1 window dedup downstream; a real 100 TB raw layer
-upserts at write time instead of re-deduplicating at every read).
-
-Scale stance: every reader takes an explicit StructType (inference
-reads the data twice and nondeterministically widens types); sinks
-partition by a low-cardinality date key so maintenance (retention,
-upsert) prunes to affected partitions; the upsert's only driver-side
-step is collecting the DISTINCT partition values of the (small) update
-set — metadata, not data.
+"""JSON-lines ingestion with an explicit schema and corrupt-record
+capture (SURVEY.md §2.1 S7-S9 generalized). Every reader takes an
+explicit StructType: inference reads the data twice and
+nondeterministically widens types. Table writes and MERGEs go through
+the one table format, ``sources/versioned``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def write_jsonl(df: DataFrame, path: str, n_files: int = 4) -> None:
-    """JSON-lines sink (one JSON object per line, n part files)."""
-    df.repartition(n_files).write.mode("overwrite").json(path)
 
 
 def read_jsonl(
@@ -42,81 +26,3 @@ def read_jsonl(
         .option("columnNameOfCorruptRecord", "_corrupt_json")
         .json(path)
     )
-
-
-def write_orc_partitioned(
-    df: DataFrame, path: str, partition_col: str
-) -> None:
-    """ORC sink partitioned by a date-like key — same layout story as
-    the parquet marts (S9): partition pruning replaces B-tree indexes."""
-    df.write.mode("overwrite").partitionBy(partition_col).orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    table_dir: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    partition_col: str,
-    version_col: str | None = None,
-) -> list[str]:
-    """Latest-wins MERGE of `updates` into the parquet table at
-    `table_dir`, rewriting ONLY the partitions the update set touches.
-
-    Invariant (documented, standard for partition-local upserts): a
-    key's partition value never changes between versions — otherwise
-    the stale row in the old partition would survive. Keys new to the
-    table insert; keys present in a touched partition are replaced
-    (anti-join base ∖ updates, then union).
-
-    At 100 TB: the base read is pruned to the touched partitions
-    (partition filter on the scan), the anti join keys on the upsert
-    key within those partitions only, and dynamic partition overwrite
-    rewrites just those directories. Cost scales with the update set's
-    partition footprint, not the table size. Returns the touched
-    partition values (driver-side metadata only).
-
-    With ``version_col`` the merge is CDC-safe under out-of-order
-    delivery: instead of updates always winning, base ∪ updates is
-    reduced to the max-version row per key (ties broken toward the
-    update), so replaying an older change can never clobber a newer
-    row — the MERGE precedence real change-data-capture needs.
-    """
-    touched = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
-    base = spark.read.parquet(table_dir).filter(
-        F.col(partition_col).isin(touched)
-    )
-    if version_col is None:
-        survivors = base.join(
-            updates.select(*key_cols).distinct(), on=key_cols, how="left_anti"
-        )
-        merged = survivors.unionByName(updates)
-    else:
-        from pyspark.sql import Window
-
-        allrows = base.withColumn("_src", F.lit(0)).unionByName(
-            updates.withColumn("_src", F.lit(1))
-        )
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.col(version_col).desc(), F.col("_src").desc()
-        )
-        merged = (
-            allrows.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_src")
-        )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(
-            table_dir
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return touched

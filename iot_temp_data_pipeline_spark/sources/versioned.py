@@ -19,15 +19,20 @@ Mechanics (all standard, all public):
 - A manifest (``<table>/_manifests/v<N>.json``) lists each data file
   with row count and layout-column min/max — per-file stats, the same
   thing an Iceberg manifest stores. Committing a version = writing one
-  small JSON and atomically renaming it in; readers of version N-1
-  never observe a half-written N (rename is the commit point).
+  small JSON and hard-linking it to its final name, which fails if
+  that version exists; readers of version N-1 never observe a
+  half-written N (the link is the commit point).
 - ``read_version`` prunes files against a layout-column predicate
   DRIVER-SIDE from manifest stats before Spark ever lists them — scan
   cost scales with the predicate's footprint.
 - ``upsert`` is copy-on-write: rewrite only files whose stats range
-  overlaps the update keys' layout values; untouched files are carried
-  into the new manifest BY REFERENCE. Old versions remain readable
-  (time travel) until explicitly expired.
+  holds one of the update set's distinct layout values; untouched
+  files are carried into the new manifest BY REFERENCE. Old versions
+  remain readable (time travel) until explicitly expired.
+- ``compact`` rewrites small files into a new version the same
+  copy-on-write way. Every MERGE and compaction of a table thus
+  commits through one manifest link, and a reader never sees a table
+  half-rewritten.
 
 Driver-side work is metadata-only (file lists, min/max pairs) —
 bounded by file count, never row count, exactly like any table
@@ -36,12 +41,13 @@ format's commit path.
 
 from __future__ import annotations
 
+import bisect
 import glob
 import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -209,42 +215,66 @@ def upsert(
     key_cols: list[str],
     layout_col: str,
     n_files: int = 4,
+    version_col: str | None = None,
 ) -> int:
-    """Copy-on-write latest-wins MERGE producing a NEW version; the
-    previous version stays readable (snapshot isolation / time
-    travel). Only data files whose stats range overlaps the updates'
-    layout values are rewritten; the rest carry over by reference.
+    """Copy-on-write MERGE producing a NEW version; the previous version
+    stays readable (snapshot isolation / time travel). Only data files
+    whose stats range holds one of the updates' distinct layout values
+    are rewritten; the rest carry over by reference.
 
-    Same invariant as formats.merge_upsert_partitioned: a key's layout
-    value never changes between versions."""
+    Without ``version_col`` the update wins every key it carries. With
+    it, base ∪ updates is reduced to the highest-``version_col`` row per
+    key, ties going to the update, so replaying an older change can
+    never clobber a newer row (the precedence change-data-capture
+    needs under out-of-order delivery).
+
+    Invariant: a key's layout value never changes between versions —
+    otherwise the stale row in an untouched file would survive."""
     vs = versions(table)
     current = vs[-1]
     man = _read_manifest(table, current)
-    bounds = updates.agg(
-        F.min(layout_col).alias("lo"), F.max(layout_col).alias("hi")
-    ).first()
-    lo, hi = _json_safe(bounds["lo"]), _json_safe(bounds["hi"])
-    if lo is None:
+    # the distinct layout values: metadata-sized, and one job fewer
+    # than a global collect_set aggregate
+    values = [
+        _json_safe(r[0]) for r in updates.select(layout_col).distinct().collect()
+    ]
+    if not values:
         # empty update set: a MERGE with nothing to merge commits a
         # no-op version (same files by reference) rather than crashing
         _commit(table, current + 1, man["files"], layout_col)
         return current + 1
+    any_null = None in values
+    values = sorted(v for v in values if v is not None)
     touched, kept = [], []
     for e in man["files"]:
-        # a file with absent layout stats (all-null column, or a writer
-        # that omitted min/max) could hold matching keys anywhere —
-        # treat it as touched (conservative rewrite), mirroring
-        # read_version's None guard
-        overlaps = (
-            e["max"] is None
-            or e["min"] is None
-            or (e["max"] >= lo and e["min"] <= hi)
+        # a NULL layout value in the updates, or a file with absent
+        # layout stats (all-null column, or a writer that omitted
+        # min/max), could match anywhere — treat the file as touched
+        # (conservative rewrite), mirroring read_version's None guard
+        if any_null or e["min"] is None or e["max"] is None:
+            hit = True
+        else:
+            i = bisect.bisect_left(values, e["min"])
+            hit = i < len(values) and values[i] <= e["max"]
+        (touched if hit else kept).append(e)
+    base = (
+        spark.read.parquet(*[os.path.join(table, e["path"]) for e in touched])
+        if touched
+        else None
+    )
+    if version_col is not None:
+        rows = updates.withColumn("_src", F.lit(1))
+        if base is not None:
+            rows = base.withColumn("_src", F.lit(0)).unionByName(rows)
+        w = Window.partitionBy(*key_cols).orderBy(
+            F.col(version_col).desc(), F.col("_src").desc()
         )
-        (touched if overlaps else kept).append(e)
-    if touched:
-        base = spark.read.parquet(
-            *[os.path.join(table, e["path"]) for e in touched]
+        merged = (
+            rows.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn", "_src")
         )
+    elif base is not None:
         survivors = base.join(
             updates.select(*key_cols).distinct(), on=key_cols, how="left_anti"
         )

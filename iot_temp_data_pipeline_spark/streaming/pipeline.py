@@ -4,7 +4,7 @@ of the reference's orchestrated run (SURVEY.md §3.1):
   FileSensor/cron  →  availableNow file source (core.py)
   dlt ingest       →  the streaming transform feeding this sink
   dbt full refresh →  each micro-batch APPENDS to the raw layer, then
-                      recomputes staging → anomalies from the
+                      recomputes staging → anomalies → mart from the
                       accumulated raw and OVERWRITES the mart — the
                       exact `full_refresh: True` contract of
                       `airflow/dags/iot_temperature_dag.py:236-239`
@@ -22,14 +22,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.anomalies import int_temperature_anomalies
+from ..operators.marts import mart_temperature_readings, write_mart
 from ..operators.staging import stg_raw_temperature_readings
 
 
 def refresh_marts(spark: SparkSession, raw_dir: str, mart_dir: str) -> None:
-    """Full refresh: staging → anomaly mart from the accumulated raw."""
+    """Full refresh: staging → anomalies → mart from the accumulated
+    raw, written in the published mart layout (``write_mart``)."""
     raw = spark.read.parquet(raw_dir)
-    mart = int_temperature_anomalies(stg_raw_temperature_readings(raw))
-    mart.write.mode("overwrite").parquet(mart_dir)
+    stg = stg_raw_temperature_readings(raw)
+    write_mart(mart_temperature_readings(int_temperature_anomalies(stg)), mart_dir)
 
 
 def foreach_batch_refresh(raw_dir: str, mart_dir: str, audit_dir: str):

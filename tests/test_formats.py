@@ -1,7 +1,6 @@
-"""Tests for sources/formats.py: the partition-pruned upsert must not
-rewrite untouched partitions (the whole point at 100 TB), and the
-JSONL reader's PERMISSIVE corrupt-record path must actually capture
-malformed lines."""
+"""Tests for sources/formats.py's JSONL reader, whose PERMISSIVE
+corrupt-record path must actually capture malformed lines, and for the
+custom Python data source."""
 
 from __future__ import annotations
 
@@ -10,51 +9,8 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from iot_temp_data_pipeline_spark.sources.formats import (
-    merge_upsert_partitioned,
-    read_jsonl,
-)
+from iot_temp_data_pipeline_spark.sources.formats import read_jsonl
 from iot_temp_data_pipeline_spark.streaming.core import workdir
-
-
-def _part_files(table_dir: str, part: str) -> dict[str, float]:
-    d = os.path.join(table_dir, part)
-    return {
-        f: os.path.getmtime(os.path.join(d, f))
-        for f in os.listdir(d)
-        if f.endswith(".parquet")
-    }
-
-
-def test_upsert_rewrites_only_touched_partitions(spark):
-    base = spark.createDataFrame(
-        [(i, f"d{i % 3}", i * 10) for i in range(30)],
-        "id long, day string, v long",
-    )
-    work = workdir("upsert_test")
-    table_dir = f"{work}/t"
-    base.write.partitionBy("day").parquet(table_dir)
-    before_d0 = _part_files(table_dir, "day=d0")
-    before_d1 = _part_files(table_dir, "day=d1")
-
-    updates = spark.createDataFrame(
-        [(1, "d1", 999), (100, "d1", 111)], "id long, day string, v long"
-    )
-    touched = merge_upsert_partitioned(
-        spark, table_dir, updates, key_cols=["id"], partition_col="day"
-    )
-    assert touched == ["d1"]
-    # untouched partition: identical files, bit for bit location/mtime
-    assert _part_files(table_dir, "day=d0") == before_d0
-    # touched partition: rewritten
-    assert _part_files(table_dir, "day=d1") != before_d1
-
-    merged = spark.read.parquet(table_dir)
-    assert merged.count() == 31  # 30 base − 1 replaced + 1 update + 1 insert
-    assert merged.filter(F.col("id") == 1).select("v").first()[0] == 999
-    assert merged.filter(F.col("id") == 100).select("v").first()[0] == 111
-    # a d0 row is untouched
-    assert merged.filter(F.col("id") == 3).select("v").first()[0] == 30
 
 
 def test_jsonl_corrupt_records_captured(spark):

@@ -32,31 +32,6 @@ def test_materialize_and_analyze(spark, sf_dir):
     spark.sql("DROP TABLE IF EXISTS region_analyzed")
 
 
-def test_compact_small_files_preserves_content(spark):
-    import glob
-
-    from iot_temp_data_pipeline_spark.maintenance import compact_small_files
-    from iot_temp_data_pipeline_spark.streaming.core import workdir
-
-    work = workdir("compact")
-    table_dir = f"{work}/t"
-    df = spark.range(10000).selectExpr("id", "id % 7 AS v")
-    df.repartition(64).write.parquet(table_dir)  # 64 tiny files
-    assert len(glob.glob(f"{table_dir}/*.parquet")) == 64
-    before_sum = spark.read.parquet(table_dir).selectExpr(
-        "sum(id)", "sum(v)", "count(*)"
-    ).first()
-
-    n_before, n_after = compact_small_files(
-        spark, table_dir, target_bytes=10**9
-    )
-    assert (n_before, n_after) == (64, 1)
-    after_sum = spark.read.parquet(table_dir).selectExpr(
-        "sum(id)", "sum(v)", "count(*)"
-    ).first()
-    assert tuple(before_sum) == tuple(after_sum)
-
-
 def test_zorder_key_rejects_long_overflow():
     # bits * n_cols > 63 would overflow the signed-long key (and Java
     # masks shifts >= 64), silently corrupting box assignment

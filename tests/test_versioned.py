@@ -1,6 +1,7 @@
 """Manifest-based versioned tables (sources/versioned.py): snapshot
-isolation under copy-on-write upsert, time travel, file-stats pruning,
-and retention expiry."""
+isolation under copy-on-write upsert (with and without version
+precedence), time travel, file-stats pruning, compaction, retention
+expiry, and reads concurrent with commits."""
 
 from __future__ import annotations
 
@@ -73,6 +74,114 @@ def test_copy_on_write_preserves_untouched_files(spark, table):
     assert carried, "no files carried over — copy-on-write rewrote everything"
     rewritten = v1_files - {e["path"] for e in v2}
     assert rewritten, "no files rewritten — update did not touch any file"
+
+
+def test_upsert_rewrites_only_touched_files(spark, tmp_path):
+    # updates on days d0 and d2 only: the d1 file lies inside their
+    # [min, max] but holds neither value, so it carries over by reference
+    from iot_temp_data_pipeline_spark.sources.versioned import _read_manifest
+
+    t = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [(i, f"d{i % 3}", i * 10) for i in range(30)],
+        "id long, day string, v long",
+    )
+    create_table(spark, base, t, layout_col="day", n_files=3)
+    v1 = {e["min"]: e for e in _read_manifest(t, 1)["files"]}
+    assert sorted(v1) == ["d0", "d1", "d2"]  # fixture: one file per day
+    assert all(e["min"] == e["max"] for e in v1.values())
+
+    updates = spark.createDataFrame(
+        [(0, "d0", 999), (2, "d2", 888), (100, "d2", 111)],
+        "id long, day string, v long",
+    )
+    upsert(spark, t, updates, key_cols=["id"], layout_col="day")
+    v2 = {e["path"] for e in _read_manifest(t, 2)["files"]}
+    assert v1["d1"]["path"] in v2
+    assert v1["d0"]["path"] not in v2 and v1["d2"]["path"] not in v2
+
+    merged = {r["id"]: r["v"] for r in read_version(spark, t).collect()}
+    assert len(merged) == 31  # 30 base − 2 replaced + 2 updates + 1 insert
+    assert (merged[0], merged[2], merged[100]) == (999, 888, 111)
+    assert merged[1] == 10  # a d1 row is untouched
+
+
+def test_upsert_null_layout_value_touches_every_file(spark, table):
+    # a NULL layout value could sit in any file, so every file rewrites
+    # and the update lands (it is not dropped as an empty update set)
+    from iot_temp_data_pipeline_spark.sources.versioned import _read_manifest
+
+    updates = spark.createDataFrame([(5000, None, 1)], "k long, day long, v long")
+    upsert(spark, table, updates, key_cols=["k"], layout_col="day")
+    v1 = {e["path"] for e in _read_manifest(table, 1)["files"]}
+    v2 = {e["path"] for e in _read_manifest(table, 2)["files"]}
+    assert not v1 & v2
+    assert read_version(spark, table).count() == 1001
+
+
+def _cdc_table(spark, path: str) -> str:
+    rows = spark.createDataFrame(
+        [(1, 0, 10, "b"), (2, 0, 20, "b")], "k long, day long, v long, ver string"
+    )
+    create_table(spark, rows, path, layout_col="day", n_files=1)
+    return path
+
+
+def _cdc_upsert(spark, table: str, rows: list) -> dict:
+    updates = spark.createDataFrame(rows, "k long, day long, v long, ver string")
+    upsert(spark, table, updates, key_cols=["k"], layout_col="day", version_col="ver")
+    return {r["k"]: (r["v"], r["ver"]) for r in read_version(spark, table).collect()}
+
+
+def test_upsert_version_col_older_replay_cannot_clobber(spark, tmp_path):
+    t = _cdc_table(spark, str(tmp_path / "cdc"))
+    assert _cdc_upsert(spark, t, [(1, 0, 11, "c")]) == {1: (11, "c"), 2: (20, "b")}
+    # the older change arrives after the newer one: the newer row stays
+    assert _cdc_upsert(spark, t, [(1, 0, 5, "a")]) == {1: (11, "c"), 2: (20, "b")}
+
+
+def test_upsert_version_col_tie_goes_to_update_and_new_key_inserts(spark, tmp_path):
+    t = _cdc_table(spark, str(tmp_path / "cdc"))
+    got = _cdc_upsert(spark, t, [(2, 0, 21, "b"), (3, 0, 30, "a")])
+    assert got == {1: (10, "b"), 2: (21, "b"), 3: (30, "a")}
+
+
+def test_reads_during_upserts_and_compact_see_committed_rows(spark, table):
+    # a reader pinned to the latest committed version never sees a
+    # half-written table: every commit is one manifest link, and the
+    # files a version references are never rewritten in place
+    import threading
+
+    from iot_temp_data_pipeline_spark.sources.versioned import compact
+
+    stop = threading.Event()
+    counts, errors = [], []
+
+    def reader():
+        while not stop.is_set():
+            try:
+                counts.append(read_version(spark, table).count())
+            except Exception as exc:  # noqa: BLE001 — every failure counts
+                errors.append(exc)
+
+    thread = threading.Thread(target=reader)
+    thread.start()
+    try:
+        for i in range(10):  # replace-only: the row count stays 1000
+            updates = spark.range(i * 10, i * 10 + 10).select(
+                F.col("id").alias("k"),
+                (F.col("id") % 20).alias("day"),
+                F.lit(i).alias("v"),
+            )
+            upsert(spark, table, updates, key_cols=["k"], layout_col="day")
+        compact(spark, table, layout_col="day", small_rows=10**9, n_files=2)
+    finally:
+        stop.set()
+        thread.join(timeout=120)
+    assert not thread.is_alive()
+    assert errors == []
+    assert counts and set(counts) == {1000}
+    assert versions(table) == list(range(1, 13))
 
 
 def test_stats_pruning_reads_fewer_files(spark, table):
