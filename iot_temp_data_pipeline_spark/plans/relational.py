@@ -958,10 +958,10 @@ AUDIT_SPEC = [
 
 _AUDIT_N_FILES = 3
 
-# S2 encoding-fallback fixture: one file the landing zone stores as
-# latin-1 (0xE9 = é — invalid as utf-8, so the fallback chain must
-# advance past utf-8/utf-8-sig to latin1). Rows are hardcoded so the
-# oracle can pin the decoded content without seeing the filesystem.
+# S2 encoding fixture: one file the landing zone stores as latin-1
+# (0xE9 = é — invalid as utf-8, so the file must be read as latin1).
+# Rows are hardcoded so the oracle can pin the decoded content without
+# seeing the filesystem.
 _LATIN1_FILE = "part_3.csv"
 _LATIN1_ROWS = [
     (f"x_p3dev{k}", "Room Caf\xe9", f"01-02-2019 0{k}:00", str(20 + k), "In")
@@ -974,7 +974,7 @@ def _audit_landing_dir(spark: SparkSession, sf_dir: str) -> str:
     `part_<event_id % 3>.csv`, sorted by event_id, written byte-stably
     with Python so file hashes are reproducible across calls (the
     hash-skip check needs the same bytes every run), plus a latin-1
-    encoded `part_3.csv` exercising the S2 encoding fallback
+    encoded `part_3.csv` exercising the S2 encoding decision
     (`dlt_ingest/iot_temperature_pipeline.py:107-123`)."""
     import csv
     import tempfile
@@ -1151,7 +1151,7 @@ def ingest_file_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     (I12; the oracle RECONSTRUCTS each utf-8 file's bytes from `events`
     via the same `event_id % 3` assignment and hashes them in SQL, so a
     single byte of drift in the landing writer or the hash chunking
-    mismatches), the encoding the fallback chain settled on (S2), the
+    mismatches), the encoding the ingest decided on (S2), the
     post-sanitize header (I11), the per-file row count after the
     null-timestamp drop, row-number extremes/uniqueness (S5: min=1,
     max=count, all distinct), record-id uniqueness (I12 row ids), the

@@ -5,64 +5,100 @@ is single-process row-at-a-time Python: glob → sha256 → skip-check →
 pandas read with encoding fallback → per-row transform dicts → Postgres
 INSERTs. Here the same semantics are distributed Spark:
 
-- S1 directory glob      → `spark.read.csv(dir)` (or one path per file
-                           for the per-file fallback loop)
-- S2 encoding fallback   → try-in-order driver loop; Spark reads one
-                           encoding per pass (py:107-123), malformed rows
-                           surfaced via PERMISSIVE corrupt-record column
+- S1 directory glob      → `list_csv_files`, then one `spark.read.csv`
+                           per new file with an explicit schema
+- S2 encoding            → decided in the driver's pass over the bytes
+                           (`scan_file`): `utf-8` when they decode
+                           strictly as UTF-8, else `latin1`, which
+                           decodes any byte — the outcome of the
+                           reference's try-in-order chain (py:107-123)
 - S3 hash-skip           → LEFT ANTI join of file hashes against the
                            processing log (py:33-39,236-252; the
                            reference's `_get_processed_files` is a stub,
                            so its dedup never fires — ours does)
-- S4 file metadata       → `input_file_name()` + `_metadata` hidden cols
-- S5 row ids per file    → `row_number()` over a per-file window
+- S4 file metadata       → literal columns stamped on each file's rows
+- S5 row ids per file    → one `row_number()` over the batch, partitioned
+                           by the `file_hash` and `file_path` columns
 - S6 audit log           → one-row-per-file aggregate
-- I1 format dispatch     → driver-side schema inspection (py:126-143)
+- I1 format dispatch     → driver-side header inspection (py:126-143)
 - I2-I5, I10-I12         → native column expressions (never Python UDFs)
 - I6-I9 synthetic fields → `rand(seed)`/`randn(seed)` columns, documented
                            distribution-equivalent (not value-equal) to
                            the reference's numpy sequences (SURVEY §7.4.3)
 
-At scale: ingestion is a single narrow map stage per file batch — no
-shuffle except the optional per-file row_number window (partitioned by
-file, so it parallelizes per file).
+At scale: building the batch starts no Spark job (hash, encoding and
+header all come from the driver's read of the bytes); ingestion is one
+narrow map stage per file plus the row-id window's hash exchange on
+`file_hash`, which parallelizes per file.
 """
 
 from __future__ import annotations
 
+import codecs
+import csv
 import hashlib
+import itertools
 import os
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-# Encoding fallback order — `dlt_ingest/iot_temperature_pipeline.py:107-123`.
-# Labels are the reference's pandas codec names; values are the Java
-# charset names Spark's CSV reader accepts ("latin1"/"cp1252" are pandas
-# aliases Java rejects, and Java has no BOM-stripping "utf-8-sig" codec —
-# UTF-8 is its closest behavior).
-ENCODINGS = (
-    ("utf-8", "UTF-8"),
-    ("utf-8-sig", "UTF-8"),
-    ("latin1", "ISO-8859-1"),
-    ("cp1252", "windows-1252"),
-    ("iso-8859-1", "ISO-8859-1"),
-)
-
-KAGGLE_COLUMNS = {"id", "room_id/id", "noted_date", "temp", "out/in"}
+# Audit-log encoding label → the Java charset Spark's CSV reader takes.
+JAVA_CHARSETS = {"utf-8": "UTF-8", "latin1": "ISO-8859-1"}
 
 DEVICE_TYPES = ["DHT22", "DS18B20", "SHT30", "BME280", "TMP36"]  # py:197-200
 FIRMWARE_VERSIONS = ["v1.2.3", "v1.2.4", "v1.3.0", "v1.3.1", "v2.0.0"]  # py:198-201
 
 
-def sha256_file(path: str) -> str:
-    """File-level content hash, chunked — py:236-245."""
-    h = hashlib.sha256()
+@dataclass(frozen=True)
+class LandedFile:
+    path: str
+    sha256: str
+    encoding: str  # "utf-8" or "latin1"
+    header: list[str]  # column names as Spark would infer them
+
+
+def scan_file(path: str) -> LandedFile:
+    """S2/S3/I11 in one chunked driver pass over a file's bytes: its
+    SHA-256 (py:236-245), its encoding and its header row.
+
+    The encoding is ``utf-8`` when every byte decodes strictly as UTF-8
+    (an authored U+FFFD included), otherwise ``latin1``, which accepts
+    all 256 byte values — the codec the reference's pandas chain settles
+    on for the same bytes. The header is parsed with the csv module after
+    stripping a UTF-8 BOM, and named the way Spark names an inferred
+    header (`CSVUtils.makeSafeHeader`): an empty name becomes ``_c<i>``,
+    a name repeated case-insensitively gets its index appended."""
+    digest = hashlib.sha256()
+    utf8 = codecs.getincrementaldecoder("utf-8")()
+    is_utf8, head = True, b""
     with open(path, "rb") as f:
-        for chunk in iter(lambda: f.read(1 << 20), b""):
-            h.update(chunk)
-    return h.hexdigest()
+        for chunk in itertools.chain(iter(lambda: f.read(1 << 20), b""), [b""]):
+            digest.update(chunk)
+            if b"\n" not in head:
+                head += chunk
+            if is_utf8:
+                try:
+                    utf8.decode(chunk, final=not chunk)
+                except UnicodeDecodeError:
+                    is_utf8 = False
+    encoding = "utf-8" if is_utf8 else "latin1"
+    line = head.split(b"\n", 1)[0].removeprefix(codecs.BOM_UTF8)
+    names = next(csv.reader([line.decode(encoding)]), [])
+    lowered = [n.lower() for n in names]
+    header = [
+        f"_c{i}" if not n else f"{n}{i}" if lowered.count(n.lower()) > 1 else n
+        for i, n in enumerate(names)
+    ]
+    return LandedFile(path, digest.hexdigest(), encoding, header)
+
+
+def sha256_file(path: str) -> str:
+    """File-level content hash — py:236-245."""
+    return scan_file(path).sha256
 
 
 def list_csv_files(landing_dir: str) -> list[str]:
@@ -74,57 +110,16 @@ def list_csv_files(landing_dir: str) -> list[str]:
     )
 
 
-def read_csv_with_fallback(spark: SparkSession, path: str) -> tuple[DataFrame, str]:
-    """S2: try encodings in order until a read decodes cleanly.
-
-    Returns (clean DataFrame, encoding used). Two failure signals per
-    attempt (the Spark analog of pandas raising UnicodeDecodeError,
-    py:107-123):
-
-    - PERMISSIVE-mode corrupt-record rows (structural parse failures);
-    - U+FFFD replacement characters in any column — Spark's charset
-      decoder silently REPLACEs undecodable bytes instead of raising, so
-      a latin-1 byte read as utf-8 would otherwise pass straight through
-      as mojibake. Treating U+FFFD as a decode failure advances the
-      chain to an encoding under which every byte is valid (latin1
-      accepts all 256 byte values, so the loop always terminates). A
-      genuine U+FFFD authored in a valid utf-8 file would also fall
-      through — a documented deviation; the reference's pandas path
-      cannot distinguish that case either once bytes are lost.
-
-    Cost: one extra validation scan per attempted encoding per file —
-    same shape as the reference's per-attempt full pandas decode.
-    """
-    last_err: Exception | None = None
-    failed_charsets: set[str] = set()
-    for enc, java_charset in ENCODINGS:
-        # distinct pandas labels can map to the SAME Java charset
-        # (utf-8-sig → UTF-8): retrying it must fail identically, so
-        # skip the wasted full-file scan
-        if java_charset in failed_charsets:
-            continue
-        try:
-            df = (
-                spark.read.option("header", True)
-                .option("encoding", java_charset)
-                .option("mode", "PERMISSIVE")
-                .option("columnNameOfCorruptRecord", "_corrupt_record")
-                .csv(path)
-            )
-            bad = F.lit(False)
-            for c in df.columns:
-                if c == "_corrupt_record":
-                    bad = bad | F.col(c).isNotNull()
-                else:
-                    bad = bad | F.col(c).contains("�")
-            if df.filter(bad).limit(1).count():
-                failed_charsets.add(java_charset)
-                continue
-            return df.drop("_corrupt_record"), enc
-        except Exception as exc:  # pragma: no cover - IO errors
-            last_err = exc
-            failed_charsets.add(java_charset)
-    raise ValueError(f"could not read {path} with any encoding: {last_err}")
+def read_landed(spark: SparkSession, f: LandedFile) -> DataFrame:
+    """One read of a scanned file: all-string schema named by its raw
+    header (so Spark's header check agrees), columns sanitized after.
+    PERMISSIVE parsing null-pads a short row and drops a long row's
+    extra tokens."""
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in f.header])
+    df = spark.read.csv(
+        f.path, schema=schema, header=True, encoding=JAVA_CHARSETS[f.encoding]
+    )
+    return sanitize_columns(df)
 
 
 def sanitize_columns(df: DataFrame) -> DataFrame:
@@ -237,13 +232,13 @@ def ingest_directory(
     count, per SURVEY §2.1 S3) — the processing log itself stays
     distributed, so a million-file history never lands in driver memory.
     """
-    files = list_csv_files(landing_dir)
-    hashes = {p: sha256_file(p) for p in files}
+    scans = {p: scan_file(p) for p in list_csv_files(landing_dir)}
+    files = list(scans)
 
     skipped: list[str] = []
     if processed_hashes is not None and files:
         candidates = spark.createDataFrame(
-            [(p, hashes[p]) for p in files],
+            [(p, scans[p].sha256) for p in files],
             schema="file_path string, file_hash string",
         )
         fresh = {
@@ -262,13 +257,14 @@ def ingest_directory(
     load_id = load_id or hashlib.md5(
         "\x00".join(files).encode()
     ).hexdigest()[:12]
+    meta = ["file_name", "file_path", "file_size_bytes", "file_hash"]
     parts: list[DataFrame] = []
     audit_rows: list[tuple] = []
     for path in files:
-        df, enc = read_csv_with_fallback(spark, path)
-        df = sanitize_columns(df)
-        # S4/I11: the per-file audit row records the post-sanitize header
-        # (the reference's file log stores per-file metadata alongside the
+        scan = scans[path]
+        df = read_landed(spark, scan)
+        # S4/I11: the audit row records the post-sanitize header (the
+        # reference's file log stores per-file metadata alongside the
         # hash, `dlt_ingest/iot_temperature_pipeline.py:27-102`)
         sanitized_header = ",".join(df.columns)
         # I1 format dispatch — py:126-143
@@ -284,46 +280,11 @@ def ingest_directory(
             )
         else:
             raise ValueError(f"unrecognized CSV format in {path}: {sorted(raw_cols)}")
-
-        if synthetic_fields:
-            df = with_synthetic_sensor_fields(df)
-
-        # I10 drop null-timestamp rows (py:204-207)
-        df = df.na.drop(subset=["timestamp"])
-
-        # S4/S5: file metadata + per-file row ids
-        from pyspark.sql import Window
-
-        file_hash = hashes[path]
-        w = Window.partitionBy(F.lit(file_hash)).orderBy(
-            F.col("timestamp"), F.col("device_id")
-        )
-        rn = F.row_number().over(w)
-        df = (
-            df.withColumn("row_number", rn)
-            .withColumn(
-                "file_record_id", F.concat_ws("_", F.lit(file_hash), rn.cast("string"))
-            )
-            .withColumn("file_name", F.lit(os.path.basename(path)))
-            .withColumn("file_path", F.lit(path))
-            .withColumn("file_size_bytes", F.lit(os.path.getsize(path)))
-            .withColumn("file_hash", F.lit(file_hash))
-            .withColumn("ingestion_timestamp", F.current_timestamp())
-            .withColumn("_dlt_load_id", F.lit(load_id))
-            .withColumn("_dlt_id", F.sha2(F.concat_ws("|", F.lit(file_hash), rn), 256))
-        )
-        parts.append(df)
-        audit_rows.append(
-            (
-                os.path.basename(path),
-                path,
-                os.path.getsize(path),
-                file_hash,
-                "processed",
-                enc,
-                sanitized_header,
-            )
-        )
+        # S4: file metadata as literals, not looked up from `_metadata`,
+        # whose file name and path come back URL-encoded
+        values = (os.path.basename(path), path, os.path.getsize(path), scan.sha256)
+        parts.append(df.select("*", *[F.lit(v).alias(c) for c, v in zip(meta, values)]))
+        audit_rows.append((*values, "processed", scan.encoding, sanitized_header))
 
     schema = (
         "file_name string, file_path string, file_size_bytes long, "
@@ -331,12 +292,28 @@ def ingest_directory(
         "sanitized_columns string"
     )
     audit = spark.createDataFrame(audit_rows, schema=schema)
-    if parts:
-        readings = parts[0]
-        for p in parts[1:]:
-            readings = readings.unionByName(p)
-    else:
+    if not parts:
         readings = spark.createDataFrame([], schema="device_id string")
+        return IngestResult(readings=readings, audit_log=audit, skipped_files=skipped)
+
+    readings = reduce(DataFrame.unionByName, parts)
+    if synthetic_fields:
+        readings = with_synthetic_sensor_fields(readings)
+    # I10 drop null-timestamp rows (py:204-207)
+    readings = readings.na.drop(subset=["timestamp"])
+    # S5: per-file row ids from one window over the batch; file_path
+    # keeps two byte-identical files of one drop numbered apart
+    w = Window.partitionBy("file_hash", "file_path").orderBy("timestamp", "device_id")
+    rn = F.col("row_number")
+    readings = readings.withColumn("row_number", F.row_number().over(w)).select(
+        *[c for c in readings.columns if c not in meta],
+        rn,
+        F.concat_ws("_", "file_hash", rn.cast("string")).alias("file_record_id"),
+        *meta,
+        F.current_timestamp().alias("ingestion_timestamp"),
+        F.lit(load_id).alias("_dlt_load_id"),
+        F.sha2(F.concat_ws("|", "file_hash", rn), 256).alias("_dlt_id"),
+    )
     return IngestResult(readings=readings, audit_log=audit, skipped_files=skipped)
 
 

@@ -1,4 +1,4 @@
-"""File-based ingestion path (S1-S7, I1-I12): encoding fallback,
+"""File-based ingestion path (S1-S7, I1-I12): encoding decision,
 format dispatch, hash-skip, per-file metadata/row ids, audit log."""
 
 from __future__ import annotations
@@ -8,7 +8,8 @@ import pytest
 from iot_temp_data_pipeline_spark.sources.csv_ingest import (
     ingest_directory,
     list_csv_files,
-    read_csv_with_fallback,
+    read_landed,
+    scan_file,
     sha256_file,
 )
 
@@ -23,7 +24,7 @@ __export__.temp_log_196128_abc,Room Admin,09-12-2018 10:00,,Out
 @pytest.fixture()
 def landing(tmp_path):
     (tmp_path / "a.csv").write_text(KAGGLE_CSV, encoding="utf-8")
-    # latin1-only bytes (0xe9 = é) exercise the encoding fallback chain
+    # latin1-only bytes (0xe9 = é): not UTF-8, so the file reads as latin1
     (tmp_path / "b.csv").write_bytes(
         "id,room_id/id,noted_date,temp,out/in\n"
         "x_caf\xe9_19699,Room Admin,01-01-2019 00:00,22,In\n".encode("latin1")
@@ -38,15 +39,114 @@ def test_glob_and_hash(landing):
     assert len(h) == 64 and h == sha256_file(files[0])
 
 
-def test_encoding_fallback(spark, landing):
-    files = list_csv_files(landing)
-    _, enc_a = read_csv_with_fallback(spark, files[0])
-    assert enc_a == "utf-8"
-    df_b, enc_b = read_csv_with_fallback(spark, files[1])
-    # utf-8 decode of the 0xe9 byte yields U+FFFD, which the fallback
-    # must treat as a decode failure and advance to latin1
-    assert enc_b == "latin1"
-    assert any("caf\xe9" in r["id"] for r in df_b.collect())
+def test_scan_decides_encoding(spark, landing):
+    a, b = (scan_file(p) for p in list_csv_files(landing))
+    assert (a.encoding, b.encoding) == ("utf-8", "latin1")
+    assert a.sha256 == sha256_file(a.path)
+    assert a.header == b.header == ["id", "room_id/id", "noted_date", "temp", "out/in"]
+    # the 0xe9 byte is not UTF-8, so b.csv reads as latin1 and é survives
+    assert any("caf\xe9" in r["id"] for r in read_landed(spark, b).collect())
+
+
+def test_scan_names_header_like_spark(tmp_path):
+    """Empty and case-insensitively repeated header names get the names
+    Spark's header inference gives them."""
+    path = tmp_path / "odd.csv"
+    path.write_text("id,ID,,temp, sp \n1,2,3,4,5\n", encoding="utf-8")
+    assert scan_file(str(path)).header == ["id0", "ID1", "_c2", "temp", " sp "]
+
+
+def _kaggle_rows(*rows: str) -> str:
+    return "id,room_id/id,noted_date,temp,out/in\n" + "".join(r + "\n" for r in rows)
+
+
+def test_authored_replacement_char_and_bom_stay_utf8(spark, tmp_path):
+    """A U+FFFD written on purpose is valid UTF-8: the file is read as
+    utf-8 and the character lands as authored, the way perfbench's
+    independent check decodes a file (strict UTF-8, else latin-1). A
+    BOM-prefixed UTF-8 file is utf-8 too, with the BOM gone from the
+    header the format dispatch reads."""
+    (tmp_path / "fffd.csv").write_text(
+        _kaggle_rows("x_aaaa1111,Room \ufffd Lab,08-12-2018 09:30,29,In"),
+        encoding="utf-8",
+    )
+    (tmp_path / "bom.csv").write_text(
+        _kaggle_rows("x_bbbb2222,Room Admin,08-12-2018 09:30,30,Out"),
+        encoding="utf-8-sig",
+    )
+    res = ingest_directory(spark, str(tmp_path))
+    audit = {r["file_name"]: r for r in res.audit_log.collect()}
+    assert {n: r["encoding"] for n, r in audit.items()} == {
+        "bom.csv": "utf-8",
+        "fffd.csv": "utf-8",
+    }
+    assert audit["bom.csv"]["sanitized_columns"] == "id,room_id_id,noted_date,temp,out_in"
+    locations = {r["file_name"]: r["location"] for r in res.readings.collect()}
+    assert locations == {"fffd.csv": "\ufffd Lab_in", "bom.csv": "Office_out"}
+
+
+def test_no_jobs_before_skip_check(spark, landing):
+    """Hash, encoding and header come from the driver's pass over the
+    bytes, so building the batch starts no Spark job."""
+    sc = spark.sparkContext
+    group = "csv-ingest-no-jobs"
+    sc.setJobGroup(group, "ingest_directory with no processing log")
+    try:
+        res = ingest_directory(spark, landing)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # the tracker does see this group's jobs once one runs
+        res.readings.count()
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_short_row_padded_long_row_truncated(spark, tmp_path):
+    """PERMISSIVE parsing: a short row is null-padded and kept when its
+    date parses; a long row's extra tokens are dropped."""
+    (tmp_path / "ragged.csv").write_text(
+        _kaggle_rows(
+            "x_aaaa1111,Room Admin,08-12-2018 09:30,29",
+            "x_bbbb2222,Room 809,08-12-2018 10:30,30,In,extra,more",
+        ),
+        encoding="utf-8",
+    )
+    res = ingest_directory(spark, str(tmp_path))
+    rows = {r["device_id"]: r for r in res.readings.collect()}
+    assert set(rows) == {"IOT_TEMP_AAAA1111", "IOT_TEMP_BBBB2222"}
+    assert rows["IOT_TEMP_AAAA1111"]["location"] == "Office"
+    assert rows["IOT_TEMP_AAAA1111"]["temperature"] == 29.0
+    assert rows["IOT_TEMP_BBBB2222"]["location"] == "809_in"
+    assert rows["IOT_TEMP_BBBB2222"]["temperature"] == 30.0
+    assert [r["encoding"] for r in res.audit_log.collect()] == ["utf-8"]
+
+
+def test_file_metadata_survives_special_names(spark, tmp_path):
+    """A landing file named with a space, ``%``, ``+`` and a non-ASCII
+    letter keeps its own name, path and hash on every row. The two files
+    are byte-identical, so they share a hash; each is still numbered
+    1..n on its own."""
+    names = ["x y%20\xe9.csv", "a+b.csv"]
+    for name in names:
+        (tmp_path / name).write_text(
+            _kaggle_rows(
+                "x_aaaa0000,Room Admin,08-12-2018 09:30,29,In",
+                "x_bbbb0000,Room 809,08-12-2018 10:30,30,Out",
+            ),
+            encoding="utf-8",
+        )
+    res = ingest_directory(spark, str(tmp_path))
+    expected = {
+        name: (str(tmp_path / name), sha256_file(str(tmp_path / name)))
+        for name in names
+    }
+    rows = res.readings.collect()
+    for r in rows:
+        assert (r["file_path"], r["file_hash"]) == expected[r["file_name"]]
+    for name in names:
+        assert sorted(r["row_number"] for r in rows if r["file_name"] == name) == [1, 2]
+    for r in res.audit_log.collect():
+        assert (r["file_path"], r["file_hash"]) == expected[r["file_name"]]
 
 
 def test_ingest_directory_end_to_end(spark, landing):

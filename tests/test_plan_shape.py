@@ -545,3 +545,19 @@ def test_mart_summaries_single_exchange(spark, written_mart):
         assert final_plan.count("Exchange") - final_plan.count(
             "BroadcastExchange"
         ) == 1, fn.__name__
+
+
+def test_ingest_numbers_rows_in_one_hashed_window(spark, tmp_path):
+    """S5: one row_number window over the whole batch, hash-partitioned
+    on the file_hash column. A window partitioned by a literal plans as
+    a SinglePartition exchange per file."""
+    from iot_temp_data_pipeline_spark.sources.csv_ingest import ingest_directory
+
+    from .test_csv_ingest import KAGGLE_CSV
+
+    (tmp_path / "a.csv").write_text(KAGGLE_CSV, encoding="utf-8")
+    (tmp_path / "b.csv").write_text(KAGGLE_CSV.replace("Room 809", "Room 810"), encoding="utf-8")
+    plan = plan_of(ingest_directory(spark, str(tmp_path)).readings, "extended")
+    assert "SinglePartition" not in plan
+    windows = [ln for ln in plan.splitlines() if "row_number()" in ln and "Window [" in ln]
+    assert windows and all("windowspecdefinition(file_hash" in ln for ln in windows)
