@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sources.catalog import local_table
+
 
 def apply_retention(
     df: DataFrame, ts_col: str = "ingestion_timestamp", days: int = 90
@@ -104,7 +106,8 @@ def analyzed_column_stats(
     # stats are fully driver-materialized above — drop the probe table
     # so repeated runs don't accumulate copies in the warehouse dir
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         out,
         schema="col_name string, table_rows long, num_nulls long, "
         "min_value string, max_value string",

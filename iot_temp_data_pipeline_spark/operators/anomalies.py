@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exprs import z_score
 from ..functions.stats import exact_avg, exact_stddev
+from ..sources.catalog import local_table
 
 ANOMALY_THRESHOLD = 3.0  # var('anomaly_threshold_multiplier'), dbt_project.yml:38
 
@@ -98,7 +99,7 @@ def anomaly_stats_digest(vr: DataFrame) -> DataFrame:
     The four stat views all end up BROADCAST — which collects them to
     the driver anyway. Collecting the (tiny: ≤ #devices + #locations +
     #envs + 1 rows) aggregate ONCE and re-deriving the views from a
-    LocalRelation is the same driver footprint but removes four
+    LocalRelation (`local_table`) is the same driver footprint but removes four
     separate Spark jobs over vr's lineage; each BroadcastExchange then
     materializes from driver-local data with no job at all. The digest
     is a TABLE STATISTIC of the vr materialization (the ANALYZE
@@ -120,7 +121,7 @@ def anomaly_stats_digest(vr: DataFrame) -> DataFrame:
         F.grouping_id().alias("gid"),
     )
     spark = vr.sparkSession
-    return spark.createDataFrame(stats_dist.collect(), stats_dist.schema)
+    return local_table(spark, stats_dist.collect(), stats_dist.schema)
 
 
 def _enrich_with_stats(
@@ -129,7 +130,7 @@ def _enrich_with_stats(
     t = F.col("temperature_celsius")
 
     # The stats digest is a LocalRelation (anomaly_stats_digest), so its
-    # rows are already driver-local — .collect() here plans no Spark
+    # rows are already driver-local — .collect() here starts no Spark
     # job. J1/J3/J4's build sides are MICRO-sized (1 global row, ~10
     # locations, <=3 environments): folding them into literal CASE/const
     # expressions removes three BroadcastExchanges that each cost a

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..sources.catalog import local_table
 
 BPE_ROUNDS = 8
 
@@ -126,7 +127,8 @@ def _bpe_train(
             F.split(_fold_merge(best["pa"], best["pb"]), " ").alias("sym"),
         ).persist()
         live.append(syms)
-    merges = docs.sparkSession.createDataFrame(
+    merges = local_table(
+        docs.sparkSession,
         records, "round long, pa string, pb string, merged string, cnt long"
     )
     # Release everything except the final table, which the encode

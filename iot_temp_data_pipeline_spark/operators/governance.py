@@ -146,9 +146,10 @@ def t_closeness_audit(
     ).agg(F.count("*").alias("c"))
     rows = cells.collect()
 
-    # result emits as a JVM-side literal plan (VALUES / empty range) —
-    # a Python-list createDataFrame is RDD-backed (one Python-worker
-    # roundtrip ≈ a whole scheduling floor, measured r8)
+    # result emits as a JVM-side literal plan (VALUES / empty range);
+    # a driver table with many rows would go through
+    # catalog.local_table, which plans a LocalRelation, never a Python
+    # RDD
     def _empty() -> DataFrame:
         return spark.range(0).select(
             F.lit(0).cast("long").alias("nationkey"),

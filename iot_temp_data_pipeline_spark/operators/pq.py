@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.catalog import local_table
 from .similarity import QUANT_SQL, qcosine, sql_qcos
 
 M = 8           # subspaces
@@ -390,7 +391,8 @@ def adc_topm(
         # Empty query set: return the Catalyst path's clean empty result
         # instead of building a zero-row LUT (same guard as
         # sq8.knn_sq8_matmul / similarity.knn_brute_force_matmul).
-        return enc.sparkSession.createDataFrame(
+        return local_table(
+            enc.sparkSession,
             [],
             schema="query_id long, neighbor_id long, adc_dist long,"
             " rank long",
@@ -637,7 +639,8 @@ def knn_ivfpq(
     if not q_rows:
         # Empty query set: probes (and thus cand) would be empty anyway;
         # return the clean empty frame without planning the LUT kernel.
-        return spark.createDataFrame(
+        return local_table(
+            spark,
             [],
             schema="query_id long, neighbor_id long, adc_dist long,"
             " rank long",
@@ -807,7 +810,8 @@ def knn_ivfpq_residual(
 
     q_rows = queries.select("query_id", "q_uvec").collect()
     if not q_rows:
-        return spark.createDataFrame(
+        return local_table(
+            spark,
             [],
             schema="query_id long, neighbor_id long, adc_dist long,"
             " rank long",
@@ -824,7 +828,8 @@ def knn_ivfpq_residual(
     # instead of two, and the LUT kernel's (query_id, cell_id) lookup
     # is then keyed by the SAME materialized probe set by
     # construction, not by deterministic re-execution.
-    probes = spark.createDataFrame(
+    probes = local_table(
+        spark,
         [(int(r["query_id"]), int(r["q_cell"])) for r in pc_rows],
         "query_id long, q_cell long",
     )

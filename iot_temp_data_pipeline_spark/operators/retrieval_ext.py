@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.catalog import local_table
 from .similarity import (
     EMB_DIM,
     ground_truth_topk,
@@ -214,7 +215,8 @@ def _maxsim_matmul(
     )
     spark = tok.sparkSession
     if not q_rows:
-        return spark.createDataFrame(
+        return local_table(
+            spark,
             [],
             schema="query_doc long, neighbor_doc long,"
             " maxsim_micros long, rank long",
@@ -415,7 +417,8 @@ def matryoshka_recall(
         spark, "matryoshka_serve", sf_dir, build, dims, query_mod, k
     )
     if bc is None:
-        return spark.createDataFrame(
+        return local_table(
+            spark,
             [], schema="prefix_dim long, n_queries long, mean_recall_at_k double"
         )
     # Size the GEMM tasks: a kernel task under ~1000 vectors is Arrow/

@@ -33,7 +33,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.catalog import get_or_build, load_table
+from ..sources.catalog import get_or_build, load_table, local_table
 
 QUANT_SCALE = 1_000_000
 MIN_CENTROID_MOD = 37
@@ -291,7 +291,8 @@ def knn_brute_force_matmul(
         # Empty query set: np.array([]) would build a 1-D (0,)-shaped
         # qmat and fail the worker-side GEMM; the Catalyst path returns
         # empty cleanly, so mirror it (same guard as sq8.knn_sq8_matmul).
-        return emb.sparkSession.createDataFrame(
+        return local_table(
+            emb.sparkSession,
             [],
             schema="query_id long, neighbor_id long, neighbor_label int,"
             " cosine double, rank long",
@@ -871,7 +872,8 @@ def lsh_buckets(
     """(vec_id, table_id, bucket): bucket = Σ_p 2^p·[qvec·hp_{t,p} ≥ 0].
     One broadcast of the (n_tables·n_bits)-row plane table, one
     map-side-combined agg — no shuffle of the vectors themselves."""
-    planes = spark.createDataFrame(
+    planes = local_table(
+        spark,
         _lsh_planes(dim, n_tables, n_bits),
         "table_id int, plane int, hp array<bigint>",
     )
@@ -1319,7 +1321,8 @@ def _hnm_partial_matmul(emb, query_mod: int):
     if not q_rows:
         # Empty query set: mirror the Catalyst path's clean empty result
         # instead of building a (0,)-shaped GEMM operand.
-        return emb.sparkSession.createDataFrame(
+        return local_table(
+            emb.sparkSession,
             [],
             schema="query_id long, q_label long, neighbor_id long,"
             " is_same boolean, cosine double",
@@ -1725,7 +1728,8 @@ def mmr_diverse_topk(
         )
         selected.append((r, pick["vec_id"], pick["rel"], pick["maxsim"], pick["mmr"]))
         chosen.append(pick["vec_id"])
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         selected, "rank long, vec_id long, rel double, maxsim double, mmr double"
     ).orderBy("rank")
 
@@ -1904,8 +1908,8 @@ def embedding_space_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     per_dim = get_or_build(spark, "embdiag_digest", sf_dir, build)
 
-    # JVM-side literal projection, not a Python-list createDataFrame
-    # (RDD-backed, one Python-worker roundtrip ≈ a scheduling floor)
+    # JVM-side literal projection; multi-row driver tables go through
+    # catalog.local_table, so neither starts a Python worker
     def _row(n_dims, mn, mx, mean, share):
         return spark.range(1).select(
             F.lit(n_dims).cast("long").alias("n_dims"),

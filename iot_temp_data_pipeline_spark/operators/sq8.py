@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.catalog import local_table
 from .similarity import quantized_corpus
 
 SQ8_MAX = 127
@@ -229,7 +230,8 @@ def knn_sq8_matmul(
         # qmat and fail the worker-side GEMM with a shape error; the
         # Catalyst path returns empty cleanly, so mirror it.
         spark = codes.sparkSession
-        return spark.createDataFrame(
+        return local_table(
+            spark,
             [],
             schema="query_id long, neighbor_id long, sq8_cos double, rank long",
         )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash32, portable_hash32_sql
 from ..functions.text import BPE_TOKEN_PATTERN, STOPWORDS, shingles_of_tokens, tokens
+from ..sources.catalog import local_table
 
 FINGERPRINT_K = 8
 FINGERPRINT_SEED = 7
@@ -949,7 +950,8 @@ def keyword_tagging(docs: DataFrame) -> DataFrame:
     Output per (lang, category): (lang, category, tagged_docs,
     total_hits, tagged_permille)."""
     spark = docs.sparkSession
-    dim = spark.createDataFrame(
+    dim = local_table(
+        spark,
         [(t, c) for c, ts in sorted(KEYWORD_DICT.items()) for t in ts],
         "term string, category string",
     )
@@ -1695,7 +1697,8 @@ def vocab_coverage_curve(
         vocab = vocab.unionByName(p)
     w = Window.partitionBy("n").orderBy(F.col("cnt").desc(), F.col("term"))
     ranked = vocab.withColumn("rank", F.row_number().over(w))
-    sizes_df = ranked.sparkSession.createDataFrame(
+    sizes_df = local_table(
+        ranked.sparkSession,
         [(v,) for v in sizes], schema="vocab_size long"
     )
     hit = F.col("rank") <= F.col("vocab_size")
@@ -1807,10 +1810,9 @@ def zipf_fit(docs: DataFrame) -> DataFrame:
     )
     freqs = tf.groupBy("f").agg(F.count("*").alias("m")).collect()
 
-    # results emit as a JVM-side literal projection over range(1) — a
-    # Python-list createDataFrame is RDD-backed (one Python-worker
-    # roundtrip ≈ a whole scheduling floor, measured r8), a literal
-    # Project is free
+    # results emit as a JVM-side literal projection over range(1), like
+    # every driver table of the package (catalog.local_table for
+    # multi-row ones): a literal Project starts no Python worker
     def _row(n_terms, n_groups, slope, corr):
         return spark.range(1).select(
             F.lit(n_terms).cast("long").alias("n_terms"),

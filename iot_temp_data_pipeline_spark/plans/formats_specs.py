@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.catalog import get_or_build, load_table
+from ..sources.catalog import get_or_build, load_table, local_table
 from ..sources.formats import read_jsonl
 from ..streaming.core import workdir
 from .registry import QuerySpec, shape, sql_select
@@ -852,7 +852,8 @@ def versioned_manifest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 max(e["max"] for e in man["files"]),
             )
         )
-    df = spark.createDataFrame(
+    df = local_table(
+        spark,
         rows,
         "snapshot_version long, total_rows long, "
         "min_layout string, max_layout string",

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..functions.stats import exact_avg, exact_long_sum, sql_exact_avg
 from ..operators.anomalies import deduplicated_valid_readings
 from ..operators.staging import stg_raw_temperature_readings
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_table
 from ..sources.csv_ingest import kaggle_transform
 from ..sources.readings import raw_readings
 from .oracles import oracle_prelude
@@ -1041,7 +1041,8 @@ def ingest_audit_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     landing = _audit_landing_dir(spark, sf_dir)
     part0 = [p for p in list_csv_files(landing) if p.endswith("part_0.csv")]
-    processed = spark.createDataFrame(
+    processed = local_table(
+        spark,
         [(sha256_file(p),) for p in part0], schema="file_hash string"
     )
     res = ingest_directory(spark, landing, processed_hashes=processed)
@@ -1056,7 +1057,8 @@ def ingest_audit_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(per_file, "file_name", "left")
         .na.fill(0)
     )
-    skipped = spark.createDataFrame(
+    skipped = local_table(
+        spark,
         [
             (os.path.basename(p), "skipped", "", 0, 0, 0, "")
             for p in res.skipped_files
@@ -1451,7 +1453,8 @@ def catalog_maintenance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
-    df = spark.createDataFrame(
+    df = local_table(
+        spark,
         [
             (
                 exists_before,

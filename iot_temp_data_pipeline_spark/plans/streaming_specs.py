@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.catalog import get_or_build, load_table
+from ..sources.catalog import get_or_build, load_table, local_table
 from ..streaming.core import materialize_landing, run_available_now, workdir
 from ..streaming.dedup import streaming_dedup
 from ..streaming.joins import (
@@ -1768,7 +1768,7 @@ def _streaming_winnowing_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         sunk = spark.read.schema(sink_schema).parquet(f"{work}/sink")
     else:
-        sunk = spark.createDataFrame([], sink_schema)
+        sunk = local_table(spark, [], sink_schema)
     novel_counts = sunk.groupBy("doc_id").agg(
         F.countDistinct("fp_hash").alias("n_novel_fp")
     )
@@ -2022,7 +2022,7 @@ def _streaming_corpus_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         gate = spark.read.schema(sink_schema).parquet(sink).drop("batch_id")
     else:
-        gate = spark.createDataFrame([], sink_schema).drop("batch_id")
+        gate = local_table(spark, [], sink_schema).drop("batch_id")
     from .corpus_specs import REFRESH_SPEC
 
     return shape(

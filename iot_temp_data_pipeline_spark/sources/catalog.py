@@ -12,9 +12,11 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 TABLES = (
     "region",
@@ -107,6 +109,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark, "table", f"{sf_dir}/{name}.parquet",
         lambda: _resolve_table(spark, sf_dir, name),
     )
+
+
+def local_table(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
+    """Driver-side ``rows`` (tuples or ``Row``s, in ``schema``'s column
+    order) as a DataFrame that plans as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame`` over a Python list builds a Python RDD, so
+    every job that reads the frame runs Python worker tasks. Over a
+    ``pyarrow.Table`` it plans a LocalRelation instead, which executes
+    as a LocalTableScan in the JVM: collecting it starts no job, and
+    nothing that reads it starts a Python worker. Every driver-built
+    table of the package comes through here. ``schema`` is a DDL string
+    or a StructType."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
 
 
 def _resolve_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .catalog import local_table
+
 # Audit-log encoding label → the Java charset Spark's CSV reader takes.
 JAVA_CHARSETS = {"utf-8": "UTF-8", "latin1": "ISO-8859-1"}
 
@@ -237,7 +239,8 @@ def ingest_directory(
 
     skipped: list[str] = []
     if processed_hashes is not None and files:
-        candidates = spark.createDataFrame(
+        candidates = local_table(
+            spark,
             [(p, scans[p].sha256) for p in files],
             schema="file_path string, file_hash string",
         )
@@ -291,9 +294,9 @@ def ingest_directory(
         "file_hash string, status string, encoding string, "
         "sanitized_columns string"
     )
-    audit = spark.createDataFrame(audit_rows, schema=schema)
+    audit = local_table(spark, audit_rows, schema=schema)
     if not parts:
-        readings = spark.createDataFrame([], schema="device_id string")
+        readings = local_table(spark, [], schema="device_id string")
         return IngestResult(readings=readings, audit_log=audit, skipped_files=skipped)
 
     readings = reduce(DataFrame.unionByName, parts)

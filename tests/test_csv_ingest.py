@@ -101,6 +101,42 @@ def test_no_jobs_before_skip_check(spark, landing):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_driver_built_frames_are_jvm_local(spark, landing, monkeypatch):
+    """The candidate list, the audit log and the empty readings frame are
+    built on the driver as LocalRelations: no plan that reads them has an
+    ``ExistingRDD`` (Python RDD) leaf, so none starts a Python worker."""
+    a_hash = sha256_file(list_csv_files(landing)[0])
+    log = spark.sql(f"SELECT * FROM VALUES ('{a_hash}') AS t(file_hash)")
+    collected: list[str] = []
+    collect = type(log).collect
+
+    def recording_collect(self):
+        collected.append(_physical_plan(self))
+        return collect(self)
+
+    monkeypatch.setattr(type(log), "collect", recording_collect)
+    res = ingest_directory(spark, landing, processed_hashes=log)
+    assert res.skipped_files == [list_csv_files(landing)[0]]
+    # the candidate anti-join is the one collect ingest_directory runs
+    assert len(collected) == 1 and "LeftAnti" in collected[0]
+    assert "ExistingRDD" not in collected[0]
+    assert "ExistingRDD" not in _physical_plan(res.audit_log)
+
+    everything = spark.sql(
+        "SELECT * FROM VALUES "
+        + ", ".join(f"('{sha256_file(p)}')" for p in list_csv_files(landing))
+        + " AS t(file_hash)"
+    )
+    res = ingest_directory(spark, landing, processed_hashes=everything)
+    assert res.audit_log.count() == 0 and res.readings.count() == 0
+    assert "ExistingRDD" not in _physical_plan(res.audit_log)
+    assert "ExistingRDD" not in _physical_plan(res.readings)
+
+
 def test_short_row_padded_long_row_truncated(spark, tmp_path):
     """PERMISSIVE parsing: a short row is null-padded and kept when its
     date parses; a long row's extra tokens are dropped."""

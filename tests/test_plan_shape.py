@@ -41,6 +41,36 @@ def test_anomaly_enrichment_joins_broadcast(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan  # J1 folded to literals
 
 
+def test_anomaly_stats_digest_is_driver_local(spark, sf_dir):
+    """The GROUPING SETS digest is collected once and rebuilt as a
+    LocalRelation, so re-reading its rows for the literal CASE lookups
+    starts no Spark job."""
+    from iot_temp_data_pipeline_spark.operators.anomalies import (
+        _enrich_with_stats,
+        anomaly_stats_digest,
+        deduplicated_valid_readings,
+    )
+    from iot_temp_data_pipeline_spark.operators.staging import (
+        stg_raw_temperature_readings,
+    )
+    from iot_temp_data_pipeline_spark.sources.readings import raw_readings
+
+    vr = deduplicated_valid_readings(
+        stg_raw_temperature_readings(raw_readings(spark, sf_dir))
+    )
+    stats = anomaly_stats_digest(vr)
+    plan = stats._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    sc = spark.sparkContext
+    group = "anomaly-digest-no-jobs"
+    sc.setJobGroup(group, "_enrich_with_stats over a collected digest")
+    try:
+        _enrich_with_stats(vr, stats, 3.0)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_staging_scan_prunes_columns(spark, sf_dir):
     """Column pruning reaches the parquet scan: the staging model never
     reads events.props (a wide JSON string — reading it at 100 TB would
