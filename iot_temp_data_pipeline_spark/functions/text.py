@@ -46,20 +46,6 @@ def bpe_token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(BPE_TOKEN_PATTERN)).cast("long")
 
 
-def stopword_hits(text: Column, lang: str) -> Column:
-    """How many tokens are stopwords of ``lang``."""
-    words = STOPWORDS[lang]
-    return F.size(
-        F.filter(tokens(text), lambda t: t.isin(*[F.lit(w) for w in words]))
-    ).cast("long")
-
-
-def punct_ratio(text: Column) -> Column:
-    total = F.length(text)
-    nonpunct = F.length(F.regexp_replace(text, r"[^\w\s]", ""))
-    return F.when(total > 0, (total - nonpunct).cast("double") / total).otherwise(0.0)
-
-
 def shingles_of_tokens(toks: Column, n: int = 3) -> Column:
     """Word n-gram shingles from a token-array column (distinct not
     applied). Built with sequence+transform (all JVM-side): for token

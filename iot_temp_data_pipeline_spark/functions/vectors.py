@@ -12,10 +12,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def as_double(vec: Column) -> Column:
-    return vec.cast("array<double>")
-
-
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),

@@ -24,8 +24,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.catalog import get_or_build, load_table, local_table
-from ..streaming.core import materialize_landing, run_available_now, workdir
+from ..sources.catalog import get_or_build, load_table
+from ..streaming.core import (
+    materialize_landing,
+    read_sink,
+    run_available_now,
+    run_batches,
+    run_partials,
+    workdir,
+)
 from ..streaming.dedup import streaming_dedup
 from ..streaming.joins import (
     clicks_before_errors_outer_stream,
@@ -136,7 +143,7 @@ def _streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deduped = streaming_dedup(stream, "event_time", "1 hour").drop("event_time")
     run_available_now(deduped, f"{work}/sink", f"{work}/ckpt")
-    return shape(spark.read.parquet(f"{work}/sink"), DEDUP_SPEC)
+    return shape(read_sink(spark, f"{work}/sink"), DEDUP_SPEC)
 
 
 DEDUP_ORACLE = (
@@ -187,7 +194,7 @@ def _streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = tumbling_event_stats(stream, "event_time", "1 hour", "2 hours")
     run_available_now(agg, f"{work}/sink", f"{work}/ckpt")
-    return shape(spark.read.parquet(f"{work}/sink"), WINDOW_SPEC)
+    return shape(read_sink(spark, f"{work}/sink"), WINDOW_SPEC)
 
 
 # Spark's watermark is ms-floored: wm_us = (epoch_ms(max ts) - delay_ms)
@@ -231,7 +238,7 @@ def _streaming_latest_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = latest_wins_dedup(stream)
     run_available_now(out, f"{work}/sink", f"{work}/ckpt")
-    log = spark.read.parquet(f"{work}/sink")
+    log = read_sink(spark, f"{work}/sink")
     w = Window.partitionBy("device_id", "ts_micros").orderBy(F.desc("n"))
     final = (
         log.withColumn("_rn", F.row_number().over(w))
@@ -296,7 +303,7 @@ def _streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = running_device_stats(stream)
     run_available_now(out, f"{work}/sink", f"{work}/ckpt")
-    log = spark.read.parquet(f"{work}/sink")
+    log = read_sink(spark, f"{work}/sink")
     # Final state per device = the max-n row of its update log (n is
     # strictly increasing per device across micro-batches).
     w = Window.partitionBy("device_id").orderBy(F.desc("n"))
@@ -340,7 +347,7 @@ def _streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     errors = side_stream(spark, f"{work}/errors", "e_")
     joined = clicks_before_errors_stream(clicks, errors)
     run_available_now(joined, f"{work}/sink", f"{work}/ckpt")
-    return shape(spark.read.parquet(f"{work}/sink"), JOIN_SPEC)
+    return shape(read_sink(spark, f"{work}/sink"), JOIN_SPEC)
 
 
 # End state of the watermarked inner join == the batch interval join
@@ -407,7 +414,7 @@ def _streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(dim), stream.user_id == dim.c_custkey, "inner"
     ).select("event_id", "user_id", "c_name", "c_mktsegment", "value_centi")
     run_available_now(enriched, f"{work}/sink", f"{work}/ckpt")
-    return shape(spark.read.parquet(f"{work}/sink"), ENRICH_SPEC)
+    return shape(read_sink(spark, f"{work}/sink"), ENRICH_SPEC)
 
 
 ENRICH_ORACLE = sql_select(
@@ -456,7 +463,7 @@ def _streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = f"{work}/table"
     w = Window.partitionBy("device_id", "ts_micros").orderBy(F.desc("dlt_id"))
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge_batch(batch_df: DataFrame, txn: tuple[str, int]) -> None:
         reduced = (
             batch_df.withColumn("bucket", F.abs(F.hash("device_id")) % 8)
             .withColumn("_rn", F.row_number().over(w))
@@ -464,7 +471,7 @@ def _streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("_rn")
         )
         if not versions(table):
-            create_table(spark, reduced, table, layout_col="bucket")
+            create_table(spark, reduced, table, layout_col="bucket", txn=txn)
         else:
             upsert(
                 spark,
@@ -473,15 +480,10 @@ def _streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 key_cols=["device_id", "ts_micros"],
                 layout_col="bucket",
                 version_col="dlt_id",
+                txn=txn,
             )
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_batches(stream, f"{work}/ckpt", merge_batch)
     return shape(read_version(spark, table), CDC_SPEC)
 
 
@@ -583,7 +585,7 @@ def _streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     errors = side_stream(spark, f"{work}/errors", "e_")
     joined = clicks_before_errors_outer_stream(clicks, errors)
     run_available_now(joined, f"{work}/sink", f"{work}/ckpt")
-    return shape(spark.read.parquet(f"{work}/sink"), OUTER_JOIN_SPEC)
+    return shape(read_sink(spark, f"{work}/sink"), OUTER_JOIN_SPEC)
 
 
 # Matched rows emit as they form (same as the inner join); a NULL-click
@@ -685,7 +687,7 @@ def _streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     run_available_now(agg, f"{work}/sink", f"{work}/ckpt")
-    return shape(spark.read.parquet(f"{work}/sink"), SSESSION_SPEC)
+    return shape(read_sink(spark, f"{work}/sink"), SSESSION_SPEC)
 
 
 # Oracle: batch gaps-and-islands sessions (same rewrite as the batch
@@ -733,6 +735,23 @@ CMS_STREAM_SPEC = [
 _CMS_CSV_SCHEMA = T.StructType([T.StructField("item", T.StringType())])
 
 
+def _counts(*keys: str, name: str = "cnt"):
+    """A partial builder: the micro-batch's row count per ``keys``."""
+    return lambda batch_df: batch_df.groupBy(*keys).agg(F.count("*").alias(name))
+
+
+def _ngram_counts(n: int, name: str):
+    """A partial builder: the micro-batch's word ``n``-gram counts."""
+    from ..functions.text import shingles_of_tokens, tokens
+
+    def build(batch_df: DataFrame) -> DataFrame:
+        tk = batch_df.select(tokens(F.col("text")).alias("tk"))
+        grams = F.explode(shingles_of_tokens(F.col("tk"), n)).alias(name)
+        return _counts(name)(tk.select(grams))
+
+    return build
+
+
 def _cms_token_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokens as _tokens
 
@@ -742,10 +761,12 @@ def _cms_token_input(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch maintained BY THE STREAM: every micro-batch
-    appends its own partial (row, col, cnt) sketch via foreachBatch —
-    at most depth×width rows per batch regardless of batch size — and
-    the read side merges partials by summing per cell. This is the
-    mergeable-sketch contract exercised across micro-batch boundaries;
+    writes its own partial (row, col, cnt) sketch as the sink's
+    ``batch_id=N`` partition (``core.run_partials``; a replayed batch
+    overwrites its own) — at most depth×width rows per batch regardless
+    of batch size — and the read side merges partials by summing per
+    cell. This is the mergeable-sketch contract exercised across
+    micro-batch boundaries;
     because the CMS cell table is a pure function of the token multiset
     (arrival-order and batching independent), the BATCH oracle pins the
     streamed sketch's estimates exactly."""
@@ -765,23 +786,9 @@ def _streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"{work}/sink"
 
-    def write_partial(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            sk.cms_cells(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(sink)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(write_partial)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_partials(stream, f"{work}/ckpt", {sink: sk.cms_cells})
     merged = (
-        spark.read.parquet(sink)
+        read_sink(spark, sink)
         .groupBy("row", "col")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -815,14 +822,15 @@ _HLL_CSV_SCHEMA = T.StructType(
 
 def _streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog registers maintained BY THE STREAM: each micro-batch
-    appends its own (grp, bucket, m) register partial via foreachBatch —
+    writes its own (grp, bucket, m) register partial via foreachBatch —
     at most |groups|×64 rows per batch regardless of batch size — and
     the read side merges partials by MAX per register (HLL's defining
     mergeability). Registers are a pure function of the key SET
     (arrival-order, batching, AND duplication independent — max is
     idempotent), so the BATCH oracle pins the streamed sketch exactly;
     this is the distinct-count companion to streaming_cms_partials
-    (whose cells merge by SUM and tolerate no duplication)."""
+    (whose cells merge by SUM, so each batch's partial must count once:
+    a replayed batch overwrites its own partition)."""
     from ..operators import sketches as sk
 
     work = workdir("hll")
@@ -836,23 +844,9 @@ def _streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"{work}/sink"
 
-    def write_partial(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            sk.hll_registers(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(sink)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(write_partial)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_partials(stream, f"{work}/ckpt", {sink: sk.hll_registers})
     merged = (
-        spark.read.parquet(sink)
+        read_sink(spark, sink)
         .groupBy("grp", "bucket")
         .agg(F.max("m").alias("m"))
     )
@@ -899,7 +893,7 @@ def _streaming_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     enc = pqop.pq_encode(pqop._with_unit(_with_quantized(stream)), cb)
     run_available_now(enc, f"{work}/sink", f"{work}/ckpt")
-    return shape(spark.read.parquet(f"{work}/sink"), PQENC_SPEC)
+    return shape(read_sink(spark, f"{work}/sink"), PQENC_SPEC)
 
 
 def _pqenc_oracle() -> str:
@@ -989,7 +983,7 @@ def _streaming_inc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist_hashes, "th", "left_anti"
     )
     run_available_now(kept, f"{work}/sink", f"{work}/ckpt")
-    sunk = spark.read.parquet(f"{work}/sink")
+    sunk = read_sink(spark, f"{work}/sink")
     # n_incoming from the static split (the landing zone's own count —
     # stream and batch agree by construction), kept stats from the sink
     inc_counts = inc.groupBy("source", "lang").agg(
@@ -1076,7 +1070,7 @@ def _tvd_pair_input(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _streaming_vocab_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-mix drift monitor maintained BY THE STREAM: each
-    micro-batch appends its own (term, source, k) counts — the simplest
+    micro-batch writes its own (term, source, k) counts — the simplest
     mergeable partial, bounded by the batch vocabulary, not the batch
     row count — and the read side merges by SUM, then runs the same
     integer TVD math as the batch operator. Counts are a pure function
@@ -1098,24 +1092,9 @@ def _streaming_vocab_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"{work}/sink"
 
-    def write_partial(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("term", "source")
-            .agg(F.count("*").alias("k"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(sink)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(write_partial)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_partials(stream, f"{work}/ckpt", {sink: _counts("term", "source", name="k")})
     merged = (
-        spark.read.parquet(sink)
+        read_sink(spark, sink)
         .groupBy("term", "source")
         .agg(F.sum("k").alias("k"))
     )
@@ -1161,7 +1140,7 @@ def _streaming_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Misra-Gries heavy hitters maintained BY THE STREAM — completes
     the mergeable-sketch trio (CMS, HLL, MG) across micro-batch
     boundaries: each batch folds its own partitions' MG summaries
-    (≤ 2k rows per partition, whatever the batch size) and appends
+    (≤ 2k rows per partition, whatever the batch size) and writes
     them; the read side merges by SUM and reuses the batch bound
     algebra. The MG deficit bound is partitioning-independent (it uses
     Σ N_p, identical however the items were batched), so the batch
@@ -1179,26 +1158,14 @@ def _streaming_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"{work}/sink"
 
-    def write_partial(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.mapInPandas(
-                sk._mg_partition_summaries(sk.MG_COUNTERS),
-                schema="item string, mg_count long",
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(sink)
-        )
+    summaries = sk._mg_partition_summaries(sk.MG_COUNTERS)
 
-    query = (
-        stream.writeStream.foreachBatch(write_partial)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return batch_df.mapInPandas(summaries, schema="item string, mg_count long")
+
+    run_partials(stream, f"{work}/ckpt", {sink: partial})
     merged = (
-        spark.read.parquet(sink)
+        read_sink(spark, sink)
         .groupBy("item")
         .agg(F.sum("mg_count").alias("mg_count"))
     )
@@ -1262,7 +1229,7 @@ def _streaming_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         while _time.time() < deadline:
             try:
-                if spark.read.parquet(sink).count() >= PYSTREAM_N_ROWS:
+                if read_sink(spark, sink).count() >= PYSTREAM_N_ROWS:
                     break
             except Exception:
                 pass
@@ -1270,7 +1237,7 @@ def _streaming_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         query.stop()
     out = (
-        spark.read.parquet(sink)
+        read_sink(spark, sink)
         .groupBy("device_id")
         .agg(
             F.count("*").alias("n"),
@@ -1335,7 +1302,7 @@ def _streaming_custom_source_dist(spark: SparkSession, sf_dir: str) -> DataFrame
     try:
         while _time.time() < deadline:
             try:
-                if spark.read.parquet(sink).count() >= PYSTREAM_N_ROWS:
+                if read_sink(spark, sink).count() >= PYSTREAM_N_ROWS:
                     break
             except Exception:
                 pass
@@ -1343,7 +1310,7 @@ def _streaming_custom_source_dist(spark: SparkSession, sf_dir: str) -> DataFrame
     finally:
         query.stop()
     out = (
-        spark.read.parquet(sink)
+        read_sink(spark, sink)
         .groupBy("device_id")
         .agg(
             F.count("*").alias("n"),
@@ -1380,7 +1347,7 @@ def _histq_bin_input(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _streaming_histq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width histogram quantiles maintained BY THE STREAM — the
     fourth streamed mergeable sketch (CMS, HLL, MG, histogram): each
-    micro-batch appends its own (bin, cnt) partial — bounded by the
+    micro-batch writes its own (bin, cnt) partial — bounded by the
     value range over the bin width, not the batch size — and the read
     side merges by SUM, then runs the same exact-integer CDF probes as
     the batch sketch. Bin counts are a pure function of the value
@@ -1397,24 +1364,9 @@ def _streaming_histq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"{work}/sink"
 
-    def write_partial(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("bin")
-            .agg(F.count("*").alias("cnt"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(sink)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(write_partial)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_partials(stream, f"{work}/ckpt", {sink: _counts("bin")})
     merged = (
-        spark.read.parquet(sink).groupBy("bin").agg(F.sum("cnt").alias("cnt"))
+        read_sink(spark, sink).groupBy("bin").agg(F.sum("cnt").alias("cnt"))
     )
     return shape(sk.histogram_quantile_report(merged), HISTQ_STREAM_SPEC)
 
@@ -1456,7 +1408,7 @@ def _mad_value_input(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _streaming_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust-outlier MAD gate maintained BY THE STREAM — the fifth
     streamed mergeable sketch (CMS, HLL, MG, histogram, now the value
-    CDF): each micro-batch appends its own (event_type, cents, cnt)
+    CDF): each micro-batch writes its own (event_type, cents, cnt)
     partial — bounded by types x distinct cents, not batch size — and
     the read side merges by SUM, then runs the identical one-job
     window chain as the batch operator (profiling.mad_from_cents_tab).
@@ -1475,24 +1427,9 @@ def _streaming_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"{work}/sink"
 
-    def write_partial(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("event_type", "cents")
-            .agg(F.count("*").alias("cnt"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(sink)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(write_partial)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_partials(stream, f"{work}/ckpt", {sink: _counts("event_type", "cents")})
     merged = (
-        spark.read.parquet(sink)
+        read_sink(spark, sink)
         .groupBy("event_type", "cents")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -1520,7 +1457,7 @@ _NOVELTY_CSV_SCHEMA = T.StructType(
 def _streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus novelty curve maintained BY THE STREAM — the crawl-monitor
     twin of dedup.corpus_dedup_curve ("is this source exhausting LIVE,
-    while the crawl runs?"): each micro-batch appends its own grouped
+    while the crawl runs?"): each micro-batch writes its own grouped
     (bucket, h, cnt) partial — the per-batch distinct (batch, hash)
     cells — and the read side merges by SUM into the identical
     curve-from-cells chain. Both reductions the curve needs are
@@ -1543,24 +1480,9 @@ def _streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"{work}/sink"
 
-    def write_partial(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("bucket", "h")
-            .agg(F.count("*").alias("cnt"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(sink)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(write_partial)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_partials(stream, f"{work}/ckpt", {sink: _counts("bucket", "h")})
     cells = (
-        spark.read.parquet(sink)
+        read_sink(spark, sink)
         .groupBy("bucket", "h")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -1665,7 +1587,7 @@ def _streaming_sq8_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("code_norm2"),
     )
     run_available_now(enc, f"{work}/sink", f"{work}/ckpt")
-    return shape(spark.read.parquet(f"{work}/sink"), SQ8ENC_SPEC)
+    return shape(read_sink(spark, f"{work}/sink"), SQ8ENC_SPEC)
 
 
 def _sq8enc_oracle() -> str:
@@ -1756,19 +1678,9 @@ def _streaming_winnowing_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     run_available_now(novel, f"{work}/sink", f"{work}/ckpt")
     # an increment whose docs ALL duplicate history writes zero novel
-    # rows (no parquet files at all) — read with an explicit schema and
-    # fall back to an empty frame so the all-zero novelty report still
-    # comes out (review r10)
-    import os as _os
-
-    sink_schema = "doc_id long, fp_hash long"
-    if any(
-        f.endswith(".parquet")
-        for f in (_os.listdir(f"{work}/sink") if _os.path.isdir(f"{work}/sink") else [])
-    ):
-        sunk = spark.read.schema(sink_schema).parquet(f"{work}/sink")
-    else:
-        sunk = local_table(spark, [], sink_schema)
+    # rows (no parquet files at all): the explicit schema keeps the
+    # all-zero novelty report coming out
+    sunk = read_sink(spark, f"{work}/sink", "doc_id long, fp_hash long")
     novel_counts = sunk.groupBy("doc_id").agg(
         F.countDistinct("fp_hash").alias("n_novel_fp")
     )
@@ -1848,7 +1760,7 @@ BIGRAM_LM_SPEC = [
 
 def _streaming_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bigram LM behind quality_bigram_surprisal maintained BY THE
-    STREAM: every micro-batch appends its own (bigram, count) partial
+    STREAM: every micro-batch writes its own (bigram, count) partial
     via foreachBatch — batch-vocabulary-sized, never batch-row-sized —
     and the read side merges partials by summing per bigram (counts
     are a pure function of the token multiset ⇒ batching- and
@@ -1861,8 +1773,6 @@ def _streaming_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl pipeline keeps its perplexity-gate LM fresh without corpus
     rebuilds: per-batch partials into the model store, serve-side
     merge."""
-    from ..functions.text import shingles_of_tokens, tokens
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     work = workdir("bigramlm")
     docs.repartition(4).write.mode("overwrite").parquet(f"{work}/landing")
@@ -1873,29 +1783,9 @@ def _streaming_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = f"{work}/sink"
 
-    def write_partial(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.select(tokens(F.col("text")).alias("tk"))
-            .select(F.explode(shingles_of_tokens(F.col("tk"), 2)).alias("bg"))
-            .groupBy("bg")
-            .agg(F.count("*").alias("cnt"))
-            # batch_id provenance, the file's mergeable-partials
-            # convention (cms/hll partials) — merge ignores it, debug
-            # attribution needs it
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(sink)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(write_partial)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_partials(stream, f"{work}/ckpt", {sink: _ngram_counts(2, "bg")})
     merged = (
-        spark.read.parquet(sink).groupBy("bg").agg(F.sum("cnt").alias("c2"))
+        read_sink(spark, sink).groupBy("bg").agg(F.sum("cnt").alias("c2"))
     )
     from ..operators.text_analysis import bigram_bits_from_counts
 
@@ -1953,7 +1843,7 @@ def _streaming_corpus_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/refresh.refresh_gate_report — exact-hash, winnowing
     near-dup, history-LM surprisal, one definition site with the batch
     row) against the FROZEN history artifacts via foreachBatch, and
-    appends its per-doc gate rows to the sink. Every gate is a pure
+    writes its per-doc gate rows to the sink. Every gate is a pure
     per-doc function of (doc, frozen history) and each doc lives in
     exactly one batch, so the sink's union is batching- and
     arrival-order-independent — the batch oracle pins the streamed
@@ -1985,44 +1875,19 @@ def _streaming_corpus_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = f"{work}/sink"
     hint = _query_side_hint(spark, sf_dir)
 
-    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            rfo.refresh_gate_report(
-                batch_df,
-                hist_hashes,
-                hist_fp_pruned,
-                hist_fp_counts,
-                bits,
-                count_hint=hint,
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(sink)
+    def gate_batch(batch_df: DataFrame) -> DataFrame:
+        return rfo.refresh_gate_report(
+            batch_df, hist_hashes, hist_fp_pruned, hist_fp_counts, bits, count_hint=hint
         )
 
-    query = (
-        stream.writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    # explicit schema + empty fallback (the streaming_winnowing_novelty
-    # review-r10 convention) — an empty increment writes no files
-    import os as _os
-
+    run_partials(stream, f"{work}/ckpt", {sink: gate_batch})
+    # explicit schema: an empty increment writes no data file
     sink_schema = (
         "doc_id long, n_exact long, n_fp long, best_overlap_permille long,"
         " n_bigrams long, n_oov long, mean_centibits long, action string,"
         " batch_id long"
     )
-    if any(
-        f.endswith(".parquet")
-        for f in (_os.listdir(sink) if _os.path.isdir(sink) else [])
-    ):
-        gate = spark.read.schema(sink_schema).parquet(sink).drop("batch_id")
-    else:
-        gate = local_table(spark, [], sink_schema).drop("batch_id")
+    gate = read_sink(spark, sink, sink_schema).drop("batch_id")
     from .corpus_specs import REFRESH_SPEC
 
     return shape(
@@ -2058,7 +1923,7 @@ def _streaming_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained BY THE STREAM — the smoothed-model twin of
     streaming_bigram_lm_partials with one extra mergeable artifact:
     smoothing needs the vocabulary size V, and a count-distinct is NOT
-    sum-mergeable, so each micro-batch appends its DISTINCT token set
+    sum-mergeable, so each micro-batch writes its DISTINCT token set
     (batch-vocab-sized rows) alongside its (trigram, count) partial;
     the read side merges counts by summing and derives V as a distinct
     count over the union of token partials — both pure functions of
@@ -2067,7 +1932,7 @@ def _streaming_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     reports the top-N trigrams by count with their smoothed bits
     (trigram_bits_from_counts — the same formula the batch gate
     applies)."""
-    from ..functions.text import shingles_of_tokens, tokens
+    from ..functions.text import tokens
     from ..operators.text_analysis import trigram_bits_from_counts
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2081,37 +1946,19 @@ def _streaming_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tg_sink = f"{work}/tg_sink"
     tok_sink = f"{work}/tok_sink"
 
-    def write_partials(batch_df: DataFrame, batch_id: int) -> None:
-        tok = batch_df.select(tokens(F.col("text")).alias("tk"))
-        (
-            tok.select(
-                F.explode(shingles_of_tokens(F.col("tk"), 3)).alias("tg")
-            )
-            .groupBy("tg")
-            .agg(F.count("*").alias("cnt"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(tg_sink)
-        )
-        (
-            tok.select(F.explode("tk").alias("w"))
-            .distinct()
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(tok_sink)
-        )
+    def vocab(batch_df: DataFrame) -> DataFrame:
+        tk = tokens(F.col("text"))
+        return batch_df.select(F.explode(tk).alias("w")).distinct()
 
-    query = (
-        stream.writeStream.foreachBatch(write_partials)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    run_partials(
+        stream,
+        f"{work}/ckpt",
+        {tg_sink: _ngram_counts(3, "tg"), tok_sink: vocab},
     )
-    query.awaitTermination()
     merged = (
-        spark.read.parquet(tg_sink).groupBy("tg").agg(F.sum("cnt").alias("c3"))
+        read_sink(spark, tg_sink).groupBy("tg").agg(F.sum("cnt").alias("c3"))
     )
-    vsz = spark.read.parquet(tok_sink).agg(
+    vsz = read_sink(spark, tok_sink).agg(
         F.count_distinct("w").alias("v")
     )
     digest = (

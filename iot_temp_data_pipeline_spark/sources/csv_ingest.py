@@ -15,10 +15,11 @@ INSERTs. Here the same semantics are distributed Spark:
 - S3 hash-skip           → LEFT ANTI join of file hashes against the
                            processing log (py:33-39,236-252; the
                            reference's `_get_processed_files` is a stub,
-                           so its dedup never fires — ours does)
+                           so its dedup never fires — ours does); a
+                           byte-identical copy within one drop lands once
 - S4 file metadata       → literal columns stamped on each file's rows
 - S5 row ids per file    → one `row_number()` over the batch, partitioned
-                           by the `file_hash` and `file_path` columns
+                           by the `file_hash` column (one file per hash)
 - S6 audit log           → one-row-per-file aggregate
 - I1 format dispatch     → driver-side header inspection (py:126-143)
 - I2-I5, I10-I12         → native column expressions (never Python UDFs)
@@ -233,11 +234,15 @@ def ingest_directory(
     surviving file *list* is collected (bounded by the batch's new-file
     count, per SURVEY §2.1 S3) — the processing log itself stays
     distributed, so a million-file history never lands in driver memory.
+    A byte-identical copy within the drop is skipped the same way: the
+    first path per hash, in sorted order, lands.
     """
     scans = {p: scan_file(p) for p in list_csv_files(landing_dir)}
-    files = list(scans)
+    first: dict[str, str] = {}
+    for p, scan in scans.items():
+        first.setdefault(scan.sha256, p)
+    files = list(first.values())
 
-    skipped: list[str] = []
     if processed_hashes is not None and files:
         candidates = local_table(
             spark,
@@ -252,8 +257,8 @@ def ingest_directory(
             .select("file_path")
             .collect()
         }
-        skipped = [p for p in files if p not in fresh]
         files = [p for p in files if p in fresh]
+    skipped = sorted(set(scans) - set(files))
 
     # md5, not Python hash(): the fallback load id must agree across
     # processes (PYTHONHASHSEED randomizes str hashes per interpreter)
@@ -304,9 +309,9 @@ def ingest_directory(
         readings = with_synthetic_sensor_fields(readings)
     # I10 drop null-timestamp rows (py:204-207)
     readings = readings.na.drop(subset=["timestamp"])
-    # S5: per-file row ids from one window over the batch; file_path
-    # keeps two byte-identical files of one drop numbered apart
-    w = Window.partitionBy("file_hash", "file_path").orderBy("timestamp", "device_id")
+    # S5: per-file row ids from one window over the batch (one file per
+    # hash, so the hash names the file)
+    w = Window.partitionBy("file_hash").orderBy("timestamp", "device_id")
     rn = F.col("row_number")
     readings = readings.withColumn("row_number", F.row_number().over(w)).select(
         *[c for c in readings.columns if c not in meta],

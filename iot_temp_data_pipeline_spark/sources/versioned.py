@@ -33,6 +33,10 @@ Mechanics (all standard, all public):
   copy-on-write way. Every MERGE and compaction of a table thus
   commits through one manifest link, and a reader never sees a table
   half-rewritten.
+- A streaming writer passes ``txn = (query id, batch id)``. Each
+  manifest records the last batch id per query and every commit
+  carries that record forward, so a replayed micro-batch commits
+  nothing (Delta's ``txnAppId``/``txnVersion``).
 
 Driver-side work is metadata-only (file lists, min/max pairs) —
 bounded by file count, never row count, exactly like any table
@@ -80,13 +84,33 @@ def _read_manifest(table: str, version: int) -> dict:
         return json.load(f)
 
 
-def _commit(table: str, version: int, entries: list[dict], layout_col: str) -> None:
+def _txns(man: dict, txn: tuple[str, int] | None = None) -> dict:
+    """The manifest's ``{query id: last batch id}`` record, carried
+    forward and advanced by ``txn``."""
+    txns = dict(man.get("txns", {}))
+    if txn is not None:
+        txns[txn[0]] = txn[1]
+    return txns
+
+
+def _commit(
+    table: str,
+    version: int,
+    entries: list[dict],
+    layout_col: str,
+    txns: dict | None = None,
+) -> None:
     os.makedirs(_manifest_dir(table), exist_ok=True)
     target = _manifest_path(table, version)
     tmp = target + f".tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         json.dump(
-            {"version": version, "layout_col": layout_col, "files": entries},
+            {
+                "version": version,
+                "layout_col": layout_col,
+                "files": entries,
+                "txns": txns or {},
+            },
             f,
         )
     # Commit point must be EXCLUSIVE creation, not exists()+rename:
@@ -162,11 +186,13 @@ def create_table(
     table: str,
     layout_col: str,
     n_files: int = 8,
+    txn: tuple[str, int] | None = None,
 ) -> int:
     """Create version 1 from ``df``. ``layout_col`` is the clustering/
-    pruning column (a date or bucketable key)."""
+    pruning column (a date or bucketable key); ``txn`` is recorded as
+    in ``upsert``."""
     entries = _write_files(df, table, layout_col, n_files)
-    _commit(table, 1, entries, layout_col)
+    _commit(table, 1, entries, layout_col, _txns({}, txn))
     return 1
 
 
@@ -216,6 +242,7 @@ def upsert(
     layout_col: str,
     n_files: int = 4,
     version_col: str | None = None,
+    txn: tuple[str, int] | None = None,
 ) -> int:
     """Copy-on-write MERGE producing a NEW version; the previous version
     stays readable (snapshot isolation / time travel). Only data files
@@ -228,11 +255,19 @@ def upsert(
     never clobber a newer row (the precedence change-data-capture
     needs under out-of-order delivery).
 
+    ``txn = (query id, batch id)`` makes a streaming MERGE exactly-once
+    (Delta's ``txnAppId``/``txnVersion``): every commit carries the
+    ``{query id: last batch id}`` record forward, and a batch the latest
+    manifest already holds returns the current version uncommitted.
+
     Invariant: a key's layout value never changes between versions —
     otherwise the stale row in an untouched file would survive."""
     vs = versions(table)
     current = vs[-1]
     man = _read_manifest(table, current)
+    if txn is not None and man.get("txns", {}).get(txn[0], -1) >= txn[1]:
+        return current
+    txns = _txns(man, txn)
     # the distinct layout values: metadata-sized, and one job fewer
     # than a global collect_set aggregate
     values = [
@@ -241,7 +276,7 @@ def upsert(
     if not values:
         # empty update set: a MERGE with nothing to merge commits a
         # no-op version (same files by reference) rather than crashing
-        _commit(table, current + 1, man["files"], layout_col)
+        _commit(table, current + 1, man["files"], layout_col, txns)
         return current + 1
     any_null = None in values
     values = sorted(v for v in values if v is not None)
@@ -282,7 +317,7 @@ def upsert(
     else:
         merged = updates
     new_entries = _write_files(merged, table, layout_col, n_files)
-    _commit(table, current + 1, kept + new_entries, layout_col)
+    _commit(table, current + 1, kept + new_entries, layout_col, txns)
     return current + 1
 
 
@@ -316,11 +351,11 @@ def compact(
     if len(small) <= 1:
         # nothing to pack: commit a no-op version (all files by
         # reference) so callers get uniform version bookkeeping
-        _commit(table, current + 1, man["files"], layout_col)
+        _commit(table, current + 1, man["files"], layout_col, _txns(man))
         return current + 1, 0, len(man["files"])
     df = spark.read.parquet(*[os.path.join(table, e["path"]) for e in small])
     new_entries = _write_files(df, table, layout_col, n_files)
-    _commit(table, current + 1, kept + new_entries, layout_col)
+    _commit(table, current + 1, kept + new_entries, layout_col, _txns(man))
     return current + 1, len(small), len(kept)
 
 

@@ -13,6 +13,11 @@ micro-batch semantics are native Structured Streaming:
   with bounded state (dedup.py)
 - full-refresh marts per run     → ``foreachBatch`` re-running the batch
   model chain per micro-batch (pipeline.py)
+- a re-run must be harmless      → one exactly-once micro-batch sink
+  (core.run_batches): each write carries ``txn = (query id, batch id)``;
+  per-batch partials overwrite their own ``batch_id=N`` partition
+  (core.run_partials) and versioned MERGEs skip a batch their manifest
+  already holds, so a batch replayed after a crash lands once
 - beyond-reference: event-time tumbling windows with late-data
   watermarking (windows.py) and a custom stateful operator via
   ``applyInPandasWithState`` (stateful.py)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.csv_ingest import kaggle_transform
-from .core import run_available_now
+from .core import read_sink, run_available_now
 
 # Landing-zone CSV shape: the Kaggle columns (sanitized names, all-string
 # like a raw CSV) plus the surrogate event_id used as a stable row key.
@@ -62,4 +62,4 @@ def streamed_kaggle_ingest(
         .select("event_id", "device_id", "timestamp", "temperature", "location")
     )
     run_available_now(out, sink_dir, checkpoint_dir)
-    return spark.read.parquet(sink_dir)
+    return read_sink(spark, sink_dir)

@@ -3,6 +3,9 @@ format dispatch, hash-skip, per-file metadata/row ids, audit log."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 
 from iot_temp_data_pipeline_spark.sources.csv_ingest import (
@@ -159,14 +162,13 @@ def test_short_row_padded_long_row_truncated(spark, tmp_path):
 
 def test_file_metadata_survives_special_names(spark, tmp_path):
     """A landing file named with a space, ``%``, ``+`` and a non-ASCII
-    letter keeps its own name, path and hash on every row. The two files
-    are byte-identical, so they share a hash; each is still numbered
-    1..n on its own."""
+    letter keeps its own name, path and hash on every row, and each file
+    is numbered 1..n on its own."""
     names = ["x y%20\xe9.csv", "a+b.csv"]
-    for name in names:
+    for k, name in enumerate(names):
         (tmp_path / name).write_text(
             _kaggle_rows(
-                "x_aaaa0000,Room Admin,08-12-2018 09:30,29,In",
+                f"x_aaaa0000,Room Admin,08-12-2018 09:30,{29 + k},In",
                 "x_bbbb0000,Room 809,08-12-2018 10:30,30,Out",
             ),
             encoding="utf-8",
@@ -214,6 +216,19 @@ def test_hash_skip(spark, landing):
     second = ingest_directory(spark, landing, processed_hashes=log)
     assert len(second.skipped_files) == 2
     assert second.readings.count() == 0
+
+
+def test_identical_files_in_one_drop_land_once(spark, landing):
+    """A byte-identical copy within one drop is skipped like a
+    re-delivery: the first path in sorted order lands, the copy is
+    reported in ``skipped_files``, and no ``_dlt_id`` repeats."""
+    copy = os.path.join(landing, "a_copy.csv")
+    shutil.copy(os.path.join(landing, "a.csv"), copy)
+    res = ingest_directory(spark, landing)
+    assert res.skipped_files == [copy]
+    assert {r["file_name"] for r in res.audit_log.collect()} == {"a.csv", "b.csv"}
+    ids = [r["_dlt_id"] for r in res.readings.collect()]
+    assert len(ids) == 4 and len(set(ids)) == 4
 
 
 def test_synthetic_fields_bounds(spark, landing):

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from iot_temp_data_pipeline_spark.sources.readings import raw_readings
@@ -185,7 +186,11 @@ def test_streaming_cms_merges_multiple_partials(spark, sf_dir, tmp_path):
 
     from iot_temp_data_pipeline_spark.operators import sketches as sk
     from iot_temp_data_pipeline_spark.plans.streaming_specs import _cms_token_input
-    from iot_temp_data_pipeline_spark.streaming.core import materialize_landing
+    from iot_temp_data_pipeline_spark.streaming.core import (
+        materialize_landing,
+        read_sink,
+        run_partials,
+    )
 
     landing, sink, ckpt = (
         str(tmp_path / "landing"),
@@ -199,25 +204,116 @@ def test_streaming_cms_merges_multiple_partials(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 2)
         .csv(landing)
     )
-
-    def write_partial(batch_df, batch_id):
-        (
-            sk.cms_cells(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(sink)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(write_partial)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    partials = spark.read.parquet(sink)
+    run_partials(stream, ckpt, {sink: sk.cms_cells})
+    partials = read_sink(spark, sink)
     assert partials.select("batch_id").distinct().count() >= 2
     merged = partials.groupBy("row", "col").agg(F.sum("cnt").alias("cnt"))
     batch_cells = sk.cms_cells(_cms_token_input(spark, sf_dir))
     assert merged.exceptAll(batch_cells).count() == 0
     assert batch_cells.exceptAll(merged).count() == 0
+
+
+def _drop_last_commit(ckpt: str) -> None:
+    """Leave the checkpoint as a driver that died after the sink wrote
+    its last micro-batch, but before the commit log recorded it."""
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+
+
+def test_replayed_partial_batch_is_counted_once(spark, sf_dir, tmp_path, monkeypatch):
+    """A SUM-merged partial sink: the restart replays the uncommitted
+    batch, and its partial replaces the first attempt's instead of
+    being summed twice."""
+    from iot_temp_data_pipeline_spark.plans import streaming_specs as ss
+
+    monkeypatch.setattr(ss, "workdir", lambda prefix: str(tmp_path))
+    first = sorted(ss._streaming_histq(spark, sf_dir).collect())
+    _drop_last_commit(str(tmp_path / "ckpt"))
+    # the landing is already in place; rewriting it would rename its files
+    monkeypatch.setattr(ss, "materialize_landing", lambda df, path: None)
+    assert sorted(ss._streaming_histq(spark, sf_dir).collect()) == first
+
+
+@pytest.mark.parametrize("n_files", [1, 2])
+def test_replayed_merge_commits_no_new_version(spark, tmp_path, n_files):
+    """`incremental_mart_refresh` replaying its last batch, whether that
+    batch created the table or merged into it, leaves the versions and
+    the content as they were."""
+    from iot_temp_data_pipeline_spark.sources.versioned import read_version, versions
+    from iot_temp_data_pipeline_spark.streaming.pipeline import incremental_mart_refresh
+
+    landing, table, ckpt = (str(tmp_path / d) for d in ("landing", "mart_v", "ckpt"))
+    os.makedirs(landing)
+    for k in range(n_files):
+        with open(f"{landing}/f{k}.csv", "w") as f:
+            f.write("device_id,ts_micros,temp_centi,dlt_id\n")
+            f.write(f"D1,{k},{2000 + k},a{k}\nD2,{k},{1500 + k},b{k}\n")
+    stream = (
+        spark.readStream.schema(
+            "device_id string, ts_micros long, temp_centi long, dlt_id string"
+        )
+        .option("header", True)
+        .option("maxFilesPerTrigger", 1)
+        .csv(landing)
+    )
+    incremental_mart_refresh(spark, stream, table, ckpt)
+    committed = versions(table)
+    rows = sorted(read_version(spark, table).collect())
+    assert len(committed) == n_files and len(rows) == 2 * n_files
+    _drop_last_commit(ckpt)
+    incremental_mart_refresh(spark, stream, table, ckpt)
+    assert versions(table) == committed
+    assert sorted(read_version(spark, table).collect()) == rows
+
+
+def test_replayed_micro_batch_lands_once(spark, sf_dir, tmp_path):
+    """The foreachBatch pipeline replaying its last batch: raw still
+    holds each reading once and the audit log counts it once."""
+    readings = raw_readings(spark, sf_dir).limit(500)
+    src = str(tmp_path / "src")
+    readings.repartition(3).write.mode("overwrite").parquet(src)
+    stream = spark.readStream.schema(readings.schema).option(
+        "maxFilesPerTrigger", 1
+    ).parquet(src)
+    dirs = [str(tmp_path / d) for d in ("raw", "mart", "audit", "ckpt")]
+    run_micro_batch_pipeline(stream, *dirs)
+    _drop_last_commit(dirs[3])
+    run_micro_batch_pipeline(stream, *dirs)
+    assert spark.read.parquet(dirs[0]).count() == 500
+    audit = spark.read.parquet(dirs[2])
+    assert audit.agg(F.sum("n_rows")).collect()[0][0] == 500
+
+
+def test_no_foreach_batch_outside_the_streaming_core():
+    """Only `streaming/core.py` may start a ``foreachBatch`` sink or
+    await a query: every micro-batch write goes through its
+    exactly-once sink, so none can append a replayed batch twice."""
+    package = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "iot_temp_data_pipeline_spark",
+    )
+    offenders = []
+    for root, _dirs, files in os.walk(package):
+        for name in files:
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path.endswith(os.path.join("streaming", "core.py")):
+                continue
+            with open(path, encoding="utf-8") as fh:
+                src = fh.read()
+            if "foreachBatch(" in src or "awaitTermination(" in src:
+                offenders.append(os.path.relpath(path, package))
+    assert offenders == []
+
+
+def test_read_sink_finds_batch_partitions(spark, tmp_path):
+    """`read_sink` with a schema reads an unwritten sink as an empty
+    frame, and finds the rows `write_batch` put under ``batch_id=N``."""
+    from iot_temp_data_pipeline_spark.streaming.core import read_sink, write_batch
+
+    sink = str(tmp_path / "sink")
+    assert read_sink(spark, sink, "k long").collect() == []
+    write_batch(spark.range(3).withColumnRenamed("id", "k"), sink, ("q", 4))
+    got = read_sink(spark, sink, "k long, batch_id long").collect()
+    assert sorted((r["k"], r["batch_id"]) for r in got) == [(0, 4), (1, 4), (2, 4)]

@@ -387,3 +387,30 @@ def test_diff_versions_reads_only_churned_files(spark, table):
 
     _commit(table, 3, man2["files"], man2["layout_col"])
     assert diff_versions(spark, table, 2, 3, key_cols=["k"]).count() == 0
+
+
+def _txn_upsert(spark, table: str, txn: tuple) -> int:
+    updates = spark.range(10).select(
+        F.col("id").alias("k"), (F.col("id") % 20).alias("day"), F.lit(txn[1]).alias("v")
+    )
+    return upsert(spark, table, updates, key_cols=["k"], layout_col="day", txn=txn)
+
+
+def test_same_txn_commits_once(spark, table):
+    # a replayed micro-batch (same query id, same batch id) finds its
+    # transaction in the latest manifest and commits nothing
+    assert _txn_upsert(spark, table, ("q", 0)) == 2
+    assert _txn_upsert(spark, table, ("q", 0)) == 2
+    assert versions(table) == [1, 2]
+    # another query's batch 0 is its own transaction
+    assert _txn_upsert(spark, table, ("r", 0)) == 3
+
+
+def test_compact_keeps_txn_record(spark, table):
+    from iot_temp_data_pipeline_spark.sources.versioned import compact
+
+    assert _txn_upsert(spark, table, ("q", 0)) == 2
+    v3, _, _ = compact(spark, table, layout_col="day", small_rows=10**9, n_files=2)
+    assert _txn_upsert(spark, table, ("q", 0)) == v3 == 3
+    assert _txn_upsert(spark, table, ("q", 1)) == 4
+    assert versions(table) == [1, 2, 3, 4]
